@@ -25,12 +25,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _h64(col: Column, salt: int) -> Column:
-    """Portable 60-bit hash: first 15 hex chars of md5 (identical in
-    DuckDB: ('0x' || substr(md5(x),1,15))::BIGINT)."""
-    return F.conv(F.substring(F.md5(F.concat(F.lit(f"{salt}:"), col)), 1, 15), 16, 10).cast("long")
-
-
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Groups of byte-identical texts: (fingerprint, cnt, min_id)."""
     return (
@@ -118,36 +112,6 @@ def minhash_signature(shingles: Column, n_hashes: int = 12) -> list[Column]:
     prefer the two-step ``minhash_base`` + ``minhash_from_base`` in jobs;
     values are identical (tested)."""
     return minhash_from_base(minhash_base(shingles), n_hashes)
-
-
-def minhash_signatures_flat(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 12,
-    shingle_n: int = 2,
-) -> DataFrame:
-    """Codegen twin of ``minhash_signature``: explode shingles to flat rows
-    (whole-stage-codegen md5 + universal-hash expressions, one per shingle
-    occurrence) and take per-doc MIN via hash aggregation (map-side partial
-    combine, so the shuffle carries one row per (doc, 12 longs)).
-
-    The HOF form evaluates its ``transform`` lambdas interpreted; this one
-    trades that for an explode + shuffle. Measured at sf0.1 (see
-    BASELINE.md) to decide the default. Values are identical (same hash
-    family); returns (id_col, mh0..mh{n-1})."""
-    sh = (
-        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_w"))
-        .filter(F.size("_w") >= shingle_n)  # == nonempty shingles, no double eval
-        .select(id_col, word_shingles_from_words(F.col("_w"), shingle_n).alias("_sh"))
-    )
-    ex = sh.select(id_col, F.explode("_sh").alias("_s"))
-    base = F.pmod(F.conv(F.substring(F.md5(F.col("_s")), 1, 15), 16, 10).cast("long"), F.lit(_MH_P))
-    aggs = []
-    for k in range(n_hashes):
-        a, b = _mh_coeffs(k)
-        aggs.append(F.min(F.pmod(F.lit(a) * F.col("_h") + F.lit(b), F.lit(_MH_P))).alias(f"mh{k}"))
-    return ex.select(id_col, base.alias("_h")).groupBy(id_col).agg(*aggs)
 
 
 def minhash_duplicates(

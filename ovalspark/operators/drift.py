@@ -20,22 +20,11 @@ Scale shape:
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ovalspark.functions.spans import KIND_CUM_PCT, KINDS
-
-
-def _model_cdf(k: float, min_spans: int, max_spans: int) -> float:
-    """P(n_spans <= k) under the generator's law: n = min + floor(x*W),
-    x ~ F(x)=2(1-2^-x) on [0,1), W = max-min+1."""
-    width = max_spans - min_spans + 1
-    x = (math.floor(k) - min_spans + 1) / width
-    x = min(max(x, 0.0), 1.0)
-    return 2.0 * (1.0 - 2.0 ** (-x)) if x < 1.0 else 1.0
 
 
 def ks_drift(

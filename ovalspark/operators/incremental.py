@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ovalspark.functions import spans as sp
 from ovalspark.operators.existence import check_existence
 from ovalspark.operators.spans import VIOLATION_SCHEMA, validate_spans
-from ovalspark.sources.snapshots import manifest_diff
+from ovalspark.sources.snapshots import _committed_schema, _load_manifest_raw, manifest_diff
 
 
 def validate_snapshot_delta(
@@ -75,7 +75,9 @@ def validate_snapshot_delta(
                 F.lit(None).cast("timestamp").alias("written_at"),
             )
         )
-    docs = spark.read.parquet(*added)
+    # read at to_id's committed schema (snapshot_read's read contract):
+    # no schema-inference job, column presence never depends on a file
+    docs = spark.read.schema(_committed_schema(_load_manifest_raw(root, to_id))).parquet(*added)
     return validate_spans(docs, catalog, n_assets, broadcast_catalog).unionByName(
         check_existence(docs, catalog)
     )
@@ -194,12 +196,14 @@ def validate_upsert(
     replaced generation) and ``UPSERT_LOST`` (a staged key resolves to
     none: a filter over-matched and swallowed the new row). Staged keys
     come from the commit's own added files (``manifest_diff`` — O(added)
-    discovery); the multiplicity check reads the table AS OF the upsert
-    id through the same stratified read users get. Empty result = a
-    verified merge."""
+    discovery, read at the committed schema); the multiplicity check
+    reads the table AS OF the upsert id ONCE, through the same
+    stratified read users get. Staged keys are unique (the upsert
+    contract), so both legs are one match count per staged key: 0 is
+    LOST, more than 1 is STALE. Empty result = a verified merge."""
     import pyspark.sql.functions as F
 
-    from ovalspark.sources.snapshots import _load_manifest_raw, manifest_diff, snapshot_read
+    from ovalspark.sources.snapshots import snapshot_read
 
     m = _load_manifest_raw(root, snapshot_id)
     if m["operation"] != "upsert":
@@ -208,32 +212,31 @@ def validate_upsert(
         )
     key = m["upsert_key"]
     added = manifest_diff(root, m["parent_id"], m["snapshot_id"])
-    empty = spark.createDataFrame([], VIOLATION_SCHEMA)
-    if not added:
-        return empty  # zero staged rows never commit; defensive
-    staged = spark.read.parquet(*added).select(key).distinct()
-    cur = snapshot_read(spark, root, m["snapshot_id"]).select(key)
-    counts = cur.join(staged, key, "left_semi").groupBy(key).agg(F.count("*").alias("_n"))
-    stale = counts.filter(F.col("_n") > 1).select(
-        F.col(key).cast("string").alias("doc_id"),
-        F.lit("UPSERT_STALE_GENERATION").alias("violation_class"),
-        F.concat(F.lit("present "), F.col("_n").cast("string"), F.lit(" times")).alias(
-            "actual"
-        ),
+    if not added:  # zero staged rows never commit; defensive
+        return spark.createDataFrame([], VIOLATION_SCHEMA)
+    # the commit enforced key-unique staging: no distinct() needed
+    staged = spark.read.schema(_committed_schema(m)).parquet(*added).select(key)
+    counts = (
+        snapshot_read(spark, root, m["snapshot_id"])
+        .select(key)
+        .join(staged, key, "left_semi")
+        .groupBy(key)
+        .agg(F.count("*").alias("_n"))
     )
-    lost = staged.join(cur, key, "left_anti").select(
-        F.col(key).cast("string").alias("doc_id"),
-        F.lit("UPSERT_LOST").alias("violation_class"),
-        F.lit("absent").alias("actual"),
-    )
-    return stale.unionByName(lost).select(
+    # a NULL staged key matches nothing: it counts 0 and reports LOST
+    n = F.coalesce(F.col("_n"), F.lit(0))
+    return staged.join(counts, key, "left").filter(n != 1).select(
         F.lit(None).cast("int").alias("partition_id"),
-        "doc_id",
+        F.col(key).cast("string").alias("doc_id"),
         F.lit(None).cast("int").alias("span_idx"),
         F.lit("upsert_key").alias("field"),
         F.lit("exactly one generation").alias("expected"),
-        "actual",
-        "violation_class",
+        F.when(n == 0, F.lit("absent"))
+        .otherwise(F.concat(F.lit("present "), n.cast("string"), F.lit(" times")))
+        .alias("actual"),
+        F.when(n == 0, F.lit("UPSERT_LOST"))
+        .otherwise(F.lit("UPSERT_STALE_GENERATION"))
+        .alias("violation_class"),
         F.lit(None).cast("int").alias("writer_id"),
         F.lit(None).cast("timestamp").alias("written_at"),
     )
@@ -255,7 +258,9 @@ def validate_replace(
     Both sides hash every row with ``xxhash64`` over all committed
     columns (order-independent SUM, widened to decimal so ANSI mode
     cannot overflow), reading removed files at the PARENT's committed
-    schema and added files at the commit's — a compaction that dropped,
+    schema and added files at the commit's; a fold (parent with pending
+    ``row_filters``) reads its removed side through the parent's filters
+    — a compaction that dropped,
     duplicated, or mutated any row shifts count and/or hashsum. Returns
     VIOLATION_SCHEMA rows: empty = verified; one ``REPLACE_MISMATCH``
     row otherwise. Hash collisions (a mutation set whose xxhash64 sum
@@ -263,12 +268,7 @@ def validate_replace(
     vanishing in practice, and any count change is caught exactly."""
     import pyspark.sql.functions as F
 
-    from ovalspark.sources.snapshots import (
-        _abs_path,
-        _committed_schema,
-        _load_manifest_raw,
-        _read_segment,
-    )
+    from ovalspark.sources.snapshots import _abs_path, _filter_groups, _read_segment, _read_strata
 
     m = _load_manifest_raw(root, snapshot_id)
     if m["operation"] != "replace":
@@ -323,16 +323,25 @@ def validate_replace(
     removed = [_abs_path(root, p) for p in sorted(old_paths - new_paths)]
     added = [_abs_path(root, p) for p in sorted(new_paths - old_paths)]
 
-    def _sig(paths, schema):
+    def _sig(raw, paths):
         if not paths:
             return (0, 0)
-        df = spark.read.schema(schema).parquet(*paths)
+        if raw.get("row_filters"):  # the strata, restricted to ``paths``
+            wanted = set(paths)
+            strata = {
+                sig: kept
+                for sig, ps in _filter_groups(root, raw, None).items()
+                if (kept := [p for p in ps if p in wanted])
+            }
+            df = _read_strata(spark, root, raw["row_filters"], strata, _committed_schema(raw))
+        else:
+            df = spark.read.schema(_committed_schema(raw)).parquet(*paths)
         h = F.xxhash64(*[F.col(c) for c in df.columns]).cast("decimal(38,0)")
         row = df.agg(F.count(F.lit(1)).alias("n"), F.sum(h).alias("h")).first()
         return (row["n"], int(row["h"] or 0))
 
-    want = _sig(removed, _committed_schema(pm))
-    got = _sig(added, _committed_schema(m))
+    want = _sig(pm, removed)
+    got = _sig(m, added)
     empty = spark.createDataFrame([], VIOLATION_SCHEMA)
     if want == got:
         return empty

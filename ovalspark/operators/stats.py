@@ -97,22 +97,3 @@ def column_profile_checked(df: DataFrame, columns: list[str], rsd: float = 0.02,
         "column", "n_rows", "n_nulls", "min", "max",
         "approx_distinct", "n_distinct", bound.alias("est_within_bound"),
     )
-
-
-def exact_column_profile(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Same shape but exact distinct counts — the DuckDB-oracle-comparable
-    variant (HLL estimates are not reproducible across engines)."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in columns:
-        aggs += [
-            F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-            F.min(c).cast("string").alias(f"{c}__min"),
-            F.max(c).cast("string").alias(f"{c}__max"),
-            F.count_distinct(F.col(c)).alias(f"{c}__adist"),
-        ]
-    wide = df.agg(*aggs)
-    stack_args = ", ".join(f"'{c}', {c}__nulls, {c}__min, {c}__max, {c}__adist" for c in columns)
-    return wide.selectExpr(
-        "n_rows",
-        f"stack({len(columns)}, {stack_args}) as (column, n_nulls, min, max, n_distinct)",
-    ).select("column", "n_rows", "n_nulls", "min", "max", "n_distinct")

@@ -74,6 +74,7 @@ import glob
 import json
 import os
 import tempfile
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -561,8 +562,8 @@ _SEGMENT_SPILL_ENTRIES = 512
 
 # Auto-materialize backstop for STACKED merge-on-read filters: each
 # un-materialized delete/upsert appends a row_filters entry, and every
-# read of the pre-scope strata then pays every applying filter (for
-# keys-kind filters, one anti-join sidecar read each). At a real
+# read of the pre-scope strata then pays every applying filter (keys
+# filters share one anti-join, whose build side grows). At a real
 # re-ingest cadence (hourly re-crawls) the "transient" window between
 # delete and materialization never closes on its own — so when a MoR
 # commit would leave at least this many pending filters, the committing
@@ -1601,7 +1602,8 @@ def _snapshot_delete_mor(
     carries the parent's file inventory untouched plus a ``row_filters``
     entry — the SQL predicate and its SCOPE (which files existed when
     the delete committed) — that ``snapshot_read`` applies as a plain
-    JVM filter. Zero data bytes move; the deferred rewrite is paid once
+    JVM filter (pending keys filters all share one join per read, see
+    ``_read_strata``). Zero data bytes move; the deferred rewrite is paid once
     by ``materialize_deletes`` (or never, if retention outlives the
     data). This is the right delete shape at 100 TB: a predicate
     touching half the table's files costs O(matched keys) IO here vs a
@@ -1778,46 +1780,91 @@ def _filter_groups(
     return groups
 
 
-def _apply_row_filters(
-    df: DataFrame, filters: list[dict], sig: tuple[int, ...], root: str
+_STRATUM_COL = "_ovalspark_stratum"
+
+
+def _read_keys_sidecar(spark: SparkSession, root: str, f: dict[str, Any]) -> DataFrame:
+    """A keys-kind filter's sidecar, key column only, read at an explicit
+    schema: the key's type comes from one part file's parquet footer on
+    the driver, so no Spark schema-inference job runs per filter."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    loc = _abs_path(root, f["loc"])
+    part = min(glob.glob(os.path.join(loc, "part-*.parquet")))
+    dtype = from_arrow_type(pq.read_schema(part).field(f["key"]).type)
+    return spark.read.schema(StructType([StructField(f["key"], dtype)])).parquet(loc)
+
+
+def _read_strata(
+    spark: SparkSession,
+    root: str,
+    filters: list[dict],
+    strata: dict[tuple[int, ...], list[str]],
+    schema,
 ) -> DataFrame:
-    for i in sig:
-        f = filters[i]
-        if f.get("kind") == "keys":
-            # upsert's replaced generation: anti-join the matched-keys
-            # sidecar (small — Spark broadcasts it off its file stats)
-            keys = df.sparkSession.read.parquet(_abs_path(root, f["loc"])).select(f["key"])
-            df = df.join(keys, f["key"], "left_anti")
-        else:  # "sql" (the default for pre-kind manifests)
-            pred = F.expr(f["pred"])
-            # NOT(pred IS TRUE): NULL-predicate rows were KEPT by the delete
-            df = df.filter(~F.coalesce(pred.cast("boolean"), F.lit(False)))
-    return df
+    """The stratified MoR read of ``strata`` ({filter indices: paths},
+    as ``_filter_groups`` builds them). Each stratum is one parquet scan
+    with its SQL-kind filters as plain JVM filters (pushdown-eligible).
+    Keys-kind filters cost ONE anti-join per key column, however many
+    are pending: the covered strata are tagged with their index and
+    unioned, and the build side is the union of the applicable sidecars,
+    each tagged with every stratum its scope covers. Strata no keys
+    filter covers bypass the join; NULL keys never match."""
+    plain: list[DataFrame] = []
+    keyed: list[DataFrame] = []
+    covers: dict[int, list[int]] = {}  # keys filter index -> stratum indices
+    for k, (sig, paths) in enumerate(sorted(strata.items())):
+        df = spark.read.schema(schema).parquet(*paths)
+        for i in sig:
+            f = filters[i]
+            if f.get("kind") == "keys":
+                covers.setdefault(i, []).append(k)
+            else:  # "sql" (the default for pre-kind manifests)
+                # NOT(pred IS TRUE): NULL-predicate rows were KEPT by the delete
+                df = df.filter(~F.coalesce(F.expr(f["pred"]).cast("boolean"), F.lit(False)))
+        if any(i in covers for i in sig):
+            keyed.append(df.withColumn(_STRATUM_COL, F.lit(k)))
+        else:
+            plain.append(df)
+    if keyed:
+        df = reduce(DataFrame.unionByName, keyed)
+        for key in sorted({filters[i]["key"] for i in covers}):
+            build = reduce(
+                DataFrame.unionByName,
+                [
+                    _read_keys_sidecar(spark, root, filters[i]).select(
+                        F.col(key).alias("_k"),
+                        F.explode(F.array(*[F.lit(s) for s in ks])).alias("_s"),
+                    )
+                    for i, ks in sorted(covers.items())
+                    if filters[i]["key"] == key
+                ],
+            )
+            # anti-join as outer join + IS NULL: Spark would push a
+            # left_anti join into every union branch, each with its own
+            # filter-specialized copy of the build side (one broadcast job
+            # per stratum); a matched row has a non-NULL _k
+            on = (df[key] == build["_k"]) & (df[_STRATUM_COL] == build["_s"])
+            df = df.join(build, on, "left").filter(F.col("_k").isNull()).drop("_k", "_s")
+        plain.append(df.drop(_STRATUM_COL))
+    if not plain:
+        return spark.createDataFrame([], schema)
+    return reduce(DataFrame.unionByName, plain)
 
 
 def _read_with_filters(
     spark: SparkSession, root: str, m: dict[str, Any], prune
 ) -> DataFrame:
-    """The stratified MoR read: each stratum is one parquet scan with its
-    applying predicates as plain JVM filters (pushdown-eligible), unioned
-    by name. Range pruning is two-level here too (``_filter_groups``
-    skips provably-disjoint segments by their folded bounds before
-    expanding), so the filter window no longer degrades a selective read
-    to O(inventory) metadata; filters remain a transient state that
-    ``materialize_deletes`` — or the auto-fold threshold — retires."""
-    filters = m["row_filters"]
-    schema = _committed_schema(m)
-    parts: list[DataFrame] = []
-    for sig, paths in sorted(_filter_groups(root, m, prune).items()):
-        parts.append(
-            _apply_row_filters(spark.read.schema(schema).parquet(*paths), filters, sig, root)
-        )
-    if not parts:
-        return spark.createDataFrame([], schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """The MoR read of a manifest with pending ``row_filters``:
+    ``_read_strata`` over its (optionally range-pruned) strata, so
+    pending keys filters cost one join per read, not one per stratum and
+    filter. ``_filter_groups`` prunes two-level, so a selective read in
+    the filter window stays O(refs + surviving segments) metadata."""
+    return _read_strata(
+        spark, root, m["row_filters"], _filter_groups(root, m, prune), _committed_schema(m)
+    )
 
 
 def snapshot_upsert(
@@ -1835,9 +1882,10 @@ def snapshot_upsert(
     deleted, via a keys-kind row filter (merge-on-read) scoped to the
     files that existed before this commit. Zero pre-existing files are
     rewritten; the matched keys persist as an ``_upsert_keys`` parquet
-    sidecar that the read path anti-joins (broadcast-sized) and CDC
-    retracts from. ``materialize_deletes`` folds the filter away like
-    any MoR delete.
+    sidecar that CDC retracts from and the read path anti-joins (all
+    pending keys filters share ONE join per read, not one per stratum
+    and filter). ``materialize_deletes`` folds the filter away like any
+    MoR delete.
 
     The staged frame must be UNIQUE on ``key`` — two staged rows with
     one key would both survive, which is never what merge means; the
@@ -1859,7 +1907,11 @@ def snapshot_upsert(
         raise ValueError(f"upsert key {key!r} not in staged columns {df.columns}")
     # one upstream execution for the write + the key scans below
     df = df.localCheckpoint()
-    n_staged = df.count()
+    # one aggregate; a NULL key counts as one distinct value
+    n_staged, n_keys = df.agg(
+        F.count(F.lit(1)),
+        F.count_distinct(key) + F.max(F.col(key).isNull().cast("int")),
+    ).first()
     if n_staged == 0:
         return parent if parent is not None else snapshot_write(
             df, root, mode="overwrite", guard=guard
@@ -1868,7 +1920,6 @@ def snapshot_upsert(
     # the table state — enforce it on the bootstrap commit too, or a
     # duplicate-keyed frame commits silently on an empty table and
     # raises on a non-empty one
-    n_keys = df.select(key).distinct().count()
     if n_keys != n_staged:
         raise ValueError(
             f"upsert to {root}: staged frame has {n_staged} rows but only "
@@ -1966,16 +2017,16 @@ def snapshot_upsert(
     # filters already applied via snapshot_read); per-key counts make
     # the replaced-row total exact even for non-unique old data
     keys_dir = os.path.join(data_dir, "_upsert_keys")
-    (
+    matched = (
         snapshot_read(spark, root, snapshot_id=parent)
         .join(df.select(key), key, "left_semi")
         .groupBy(key)
         .agg(F.count("*").alias("n_replaced"))
-        .write.mode("error")
-        .parquet(keys_dir)
     )
-    matched_rows = (
-        spark.read.parquet(keys_dir).agg(F.sum("n_replaced")).collect()[0][0] or 0
+    matched.write.mode("error").parquet(keys_dir)
+    matched_rows, n_matched_keys = (  # typed read-back: no inference job
+        spark.read.schema(matched.schema).parquet(keys_dir)
+        .agg(F.coalesce(F.sum("n_replaced"), F.lit(0)), F.count(F.lit(1))).first()
     )
 
     segments = list(m_raw.get("file_segments") or [])
@@ -1997,7 +2048,7 @@ def snapshot_upsert(
                 "kind": "keys",
                 "key": key,
                 "loc": os.path.relpath(keys_dir, root),
-                "n_keys": int(spark.read.parquet(keys_dir).count()),
+                "n_keys": int(n_matched_keys),
                 "scope": scope,
                 "sid": sid,
                 "deleted_rows": int(matched_rows),
@@ -2037,16 +2088,6 @@ def snapshot_upsert(
                 pass
         raise
     return _maybe_fold_filters(spark, root, sid, len(row_filters), guard, fold_threshold)
-
-
-def read_upsert_keys(spark: SparkSession, root: str, snapshot_id: int) -> DataFrame:
-    """The (key, n_replaced) sidecar an upsert commit recorded — the
-    keys whose previous generation that commit logically deleted."""
-    m = _load_manifest_raw(root, snapshot_id)
-    uk = m.get("upsert_keys")
-    if uk is None:
-        raise ValueError(f"snapshot {snapshot_id} at {root} is not an upsert commit")
-    return spark.read.parquet(_abs_path(root, uk["loc"]))
 
 
 def materialize_deletes(
@@ -2090,23 +2131,16 @@ def materialize_deletes(
 
     sid = parent + 1
     data_dir = os.path.join(root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-    schema = _committed_schema(m_raw)
     bytes_by_path = {
         _abs_path(root, e["path"]): e["bytes"]
         for e, _ in _expand_with_provenance(root, m_raw)
     }
-    rewritten = None
-    rewrite_bytes = 0
-    for sig, paths in sorted(groups.items()):
-        part = _apply_row_filters(
-            spark.read.schema(schema).parquet(*paths), filters, sig, root
-        )
-        rewritten = part if rewritten is None else rewritten.unionByName(part)
-        # pre-delete sizes: an upper bound, only used to pick a file count
-        rewrite_bytes += sum(bytes_by_path[p] for p in paths)
     new_files: list[dict[str, Any]] = []
-    if rewritten is not None:
+    if groups:
+        # pre-delete sizes: an upper bound, only used to pick a file count
+        rewrite_bytes = sum(bytes_by_path[p] for paths in groups.values() for p in paths)
         n_files = max(1, -(-rewrite_bytes // (target_file_mb * 1024 * 1024)))
+        rewritten = _read_strata(spark, root, filters, groups, _committed_schema(m_raw))
         rewritten.repartition(n_files).write.mode("error").parquet(data_dir)
         new_files = [
             fe
@@ -2196,19 +2230,6 @@ def _attach_sketches(
 
 
 _BLOOM_H2_SALT = "ovalspark:bloom:h2"
-
-
-def _bloom_params(n: int, fpp: float) -> tuple[int, int]:
-    """Standard Bloom sizing: bits m = -n·ln(p)/ln(2)², hashes
-    k = (m/n)·ln(2); m rounded up to a whole number of 64-bit words."""
-    import math
-
-    if n <= 0:
-        return 0, 1
-    m = int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2)))
-    m = (m + 63) // 64 * 64
-    k = max(1, round(m / n * math.log(2)))
-    return m, k
 
 
 def _attach_blooms(

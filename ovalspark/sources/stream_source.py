@@ -178,6 +178,16 @@ def _parse_prune(spec: str | None) -> list[tuple] | None:
     return conds
 
 
+def _mor_pending(root: str, sid: int) -> ValueError:
+    # raw file scans cannot apply the stratified merge-on-read filters:
+    # serving a pending snapshot's physical rows would resurrect deleted ones
+    return ValueError(
+        f"snapshot {sid} of {root} has merge-on-read delete filter(s) "
+        f"pending — read it via snapshot_read (stratified MoR read), or run "
+        f"materialize_deletes first"
+    )
+
+
 class _SnapshotBatchReader(DataSourceReader):
     """The default batch reader: full committed file list, no
     ``pushFilters`` (deliberately NOT implemented — works on sessions
@@ -203,15 +213,7 @@ class _SnapshotBatchReader(DataSourceReader):
     def partitions(self):
         m = sn._load_manifest_raw(self.root, self.snapshot_id)
         if m.get("row_filters"):
-            # this reader plans raw file scans — it cannot apply the
-            # stratified merge-on-read filters, and serving the physical
-            # rows would resurrect deleted ones
-            raise ValueError(
-                f"snapshot {m['snapshot_id']} of {self.root} has "
-                f"merge-on-read delete filter(s) pending — read it via "
-                f"snapshot_read (stratified MoR read), or run "
-                f"materialize_deletes first"
-            )
+            raise _mor_pending(self.root, m["snapshot_id"])
         if self.prune:
             paths = sn.prune_files(self.root, m["snapshot_id"], self.prune)
         else:
@@ -280,12 +282,7 @@ class _PruningBatchReader(_SnapshotBatchReader):
             return super().partitions()
         m = sn._load_manifest_raw(self.root, self.snapshot_id)
         if m.get("row_filters"):
-            raise ValueError(
-                f"snapshot {m['snapshot_id']} of {self.root} has "
-                f"merge-on-read delete filter(s) pending — read it via "
-                f"snapshot_read (stratified MoR read), or run "
-                f"materialize_deletes first"
-            )
+            raise _mor_pending(self.root, m["snapshot_id"])
         paths = sn.prune_files(
             self.root, m["snapshot_id"], conds + (self.prune or [])
         )
@@ -429,7 +426,11 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                 # restores an earlier generation as new table state): in
                 # CDC mode retract the undone parent generation, then
                 # emit the restored generation — otherwise consumers
-                # silently diverge from the table across a rollback
+                # silently diverge from the table across a rollback.
+                # Both legs stream raw files: neither side may carry
+                # pending MoR filters (rollback copies the target's)
+                if m.get("row_filters"):
+                    raise _mor_pending(self.root, sid)
                 if self.cdc and m.get("parent_id") is not None:
                     # truncate-and-load: retract the parent generation...
                     if prev is not None and prev[0] == m["parent_id"]:
@@ -443,6 +444,8 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                                 f"parent {m['parent_id']} expired — its retraction "
                                 f"cannot be emitted (retention outran the stream)"
                             ) from None
+                    if pm.get("row_filters"):
+                        raise _mor_pending(self.root, m["parent_id"])
                     parts.extend(
                         _FilePartition(
                             sn._abs_path(self.root, f["path"]), self.schema_json, "delete", sid

@@ -184,10 +184,22 @@ def test_two_process_tag_create_race(tmp_path, guard_name):
         assert list_tags(root) == {"winner": winner_sid}
 
 
-def _set_constraints_child(root, guard_name, cname, barrier, q):
+def _set_constraints_child(root, guard_name, cname, barrier, cas_barrier, q):
+    import ovalspark.sources.constraints as cons
     from ovalspark.sources.constraints import ConstraintError, set_constraints
     from ovalspark.sources.snapshots import ConcurrentCommitError
 
+    real_commit = cons._commit_manifest
+
+    def commit_after_both_read(*args, **kwargs):
+        # hold the first attempt until BOTH writers have read the same
+        # parent and built their manifests, so the two CAS attempts
+        # always contend (the loser's retry goes straight through)
+        cons._commit_manifest = real_commit
+        cas_barrier.wait(timeout=60)
+        return real_commit(*args, **kwargs)
+
+    cons._commit_manifest = commit_after_both_read
     try:
         barrier.wait(timeout=60)
         con = {"name": cname, "kind": "not_null", "column": "doc_id"}
@@ -220,11 +232,11 @@ def test_two_process_set_constraints_race(tmp_path, guard_name):
         files1 = _write_data_dir(root, 1, 5, "seed")
         _commit_manifest(root, None, 1, _manifest(1, None, files1), guard_name)
         ctx = mp.get_context("spawn")
-        barrier, q = ctx.Barrier(2), ctx.Queue()
+        barrier, cas_barrier, q = ctx.Barrier(2), ctx.Barrier(2), ctx.Queue()
         procs = [
             ctx.Process(
                 target=_set_constraints_child,
-                args=(root, guard_name, n, barrier, q),
+                args=(root, guard_name, n, barrier, cas_barrier, q),
             )
             for n in ("ca", "cb")
         ]

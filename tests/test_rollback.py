@@ -146,3 +146,37 @@ def test_rollback_cdc_feed_retracts_undone_and_restores(spark, tmp_path):
     rb = feed.filter("_commit_id = 3")
     assert rb.filter("_op = 'delete'").count() == 8  # undone generation (a0..a4 + bad0..2)
     assert rb.filter("_op = 'insert'").count() == 5  # restored generation
+
+
+@pytest.mark.parametrize("cdc", [False, True])
+def test_stream_refuses_rollback_or_overwrite_over_pending_mor_filters(spark, tmp_path, cdc):
+    """Rollback emission and the CDC retraction of an overwrite's parent
+    both stream raw files: over pending merge-on-read filters they would
+    re-insert (or re-retract) logically deleted rows, so the feed
+    refuses them like the batch reader does."""
+    from ovalspark.sources.snapshots import snapshot_delete
+    from ovalspark.sources.stream_source import _cdc_schema, _SnapshotStreamReader
+
+    def partitions(root, start, end):
+        schema = snapshot_read(spark, root).schema
+        reader = _SnapshotStreamReader(root, start, _cdc_schema(schema) if cdc else schema, cdc=cdc)
+        return reader.partitions({"snapshot_id": start}, {"snapshot_id": end})
+
+    root = str(tmp_path / "rb")
+    snapshot_write(_docs(spark, "a", 10), root)  # 1
+    snapshot_delete(spark, root, "doc_id = 'a0003'", strategy="merge-on-read")  # 2: pending filter
+    snapshot_write(_docs(spark, "b", 5), root, mode="append")  # 3
+    rollback_table(root, 2)  # 4: restores snapshot 2 with its filter
+    with pytest.raises(ValueError, match="materialize_deletes first"):
+        partitions(root, 3, 4)
+
+    root = str(tmp_path / "ow")
+    snapshot_write(_docs(spark, "a", 10), root)  # 1
+    snapshot_delete(spark, root, "doc_id = 'a0003'", strategy="merge-on-read")  # 2
+    snapshot_write(_docs(spark, "c", 4), root)  # 3: overwrite, parent has a pending filter
+    if cdc:
+        with pytest.raises(ValueError, match="materialize_deletes first"):
+            partitions(root, 2, 3)
+    else:
+        # the append feed emits only the new generation: nothing stale
+        assert len(partitions(root, 2, 3)) == len(manifest_diff(root, 2, 3))

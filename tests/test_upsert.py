@@ -17,7 +17,6 @@ from ovalspark.sources.snapshots import (
     current_snapshot_id,
     load_manifest,
     materialize_deletes,
-    read_upsert_keys,
     snapshot_read,
     snapshot_upsert,
     snapshot_write,
@@ -61,7 +60,8 @@ def test_upsert_replaces_and_inserts_in_one_commit(spark, tmp_path):
     assert m["operation"] == "upsert"
     assert m["total_rows"] == 30
     assert m["upsert_keys"]["n_staged"] == 20 and m["upsert_keys"]["n_replaced"] == 10
-    assert read_upsert_keys(spark, root, sid).count() == 10  # matched keys only
+    keys = spark.read.parquet(os.path.join(root, m["upsert_keys"]["loc"]))
+    assert keys.count() == 10  # matched keys only
 
 
 def test_upsert_requires_key_unique_staging(spark, tmp_path):
