@@ -223,7 +223,6 @@ def validate_upsert(
         .groupBy(key)
         .agg(F.count("*").alias("_n"))
     )
-    # a NULL staged key matches nothing: it counts 0 and reports LOST
     n = F.coalesce(F.col("_n"), F.lit(0))
     return staged.join(counts, key, "left").filter(n != 1).select(
         F.lit(None).cast("int").alias("partition_id"),

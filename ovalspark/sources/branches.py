@@ -27,7 +27,7 @@ Design — a branch IS a snapshot table:
   into one commit on main: entry paths are re-relativized (branch data
   dirs live under main's root by construction), footer stats carry
   verbatim, and the commit goes through the SAME guarded CAS as any
-  write (``_commit_new_files``) — zero bytes of data move, publish cost
+  write (``_SnapshotTxn``) — zero bytes of data move, publish cost
   is O(branch inventory) metadata. Main's vacuum cannot reap branch
   data (its sweep is scoped to ``<root>/data``), and a published
   branch's data dirs are thereafter owned by main's manifests.
@@ -68,7 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ovalspark.sources.snapshots import (
     _abs_path,
     _atomic_write,
-    _commit_new_files,
+    _check_append_schema,
     _copy_entry,
     _load_manifest_raw,
     _expand_manifest,
@@ -76,6 +76,7 @@ from ovalspark.sources.snapshots import (
     _ref_get,
     _refs_authority,
     _refs_kind,
+    _SnapshotTxn,
     current_snapshot_id,
     snapshot_read,
 )
@@ -281,60 +282,48 @@ def publish_branch(
             f"run materialize_deletes on the branch, then publish"
         )
     base = desc["base_snapshot"]
-    parent = current_snapshot_id(root)
-    if parent != base:
-        if mode == "overwrite":
+    with _SnapshotTxn(root, guard) as txn:
+        parent = txn.parent
+        if parent != base:
+            if mode == "overwrite":
+                raise BranchError(
+                    f"publish of branch {name!r}: main moved {base} -> {parent} "
+                    f"since the branch was cut — an overwrite publish would "
+                    f"discard commits nobody audited; re-branch and re-audit"
+                )
+            if not allow_divergent_base:
+                raise BranchError(
+                    f"publish of branch {name!r}: main moved {base} -> {parent} "
+                    f"since the branch was cut; pass allow_divergent_base=True "
+                    f"to rebase this APPEND onto the new head (the audit then "
+                    f"vouches only for the staged rows, not the merged view)"
+                )
+        if _already_published(root, name, head, parent, base):
             raise BranchError(
-                f"publish of branch {name!r}: main moved {base} -> {parent} "
-                f"since the branch was cut — an overwrite publish would "
-                f"discard commits nobody audited; re-branch and re-audit"
+                f"branch {name!r} head {head} already published on main "
+                f"(descriptor update was lost — crash window); drop the branch"
             )
-        if not allow_divergent_base:
-            raise BranchError(
-                f"publish of branch {name!r}: main moved {base} -> {parent} "
-                f"since the branch was cut; pass allow_divergent_base=True "
-                f"to rebase this APPEND onto the new head (the audit then "
-                f"vouches only for the staged rows, not the merged view)"
+        new_files = []
+        for fe in bm["files"]:
+            e = _copy_entry(fe)
+            ap = _abs_path(broot, fe["path"])
+            e["path"] = ap if os.path.isabs(fe["path"]) else os.path.relpath(ap, root)
+            new_files.append(e)
+        if not new_files and mode == "append":
+            raise BranchError(f"branch {name!r}: empty inventory — nothing to append")
+        if mode == "append" and txn.parent_raw is not None:
+            from pyspark.sql.types import StructType
+
+            _check_append_schema(
+                root, txn.parent_raw, StructType.fromJson(json.loads(bm["schema_json"]))
             )
-    if _already_published(root, name, head, parent, base):
-        raise BranchError(
-            f"branch {name!r} head {head} already published on main "
-            f"(descriptor update was lost — crash window); drop the branch"
+        props = dict(properties or {})
+        props.update(
+            {"published_branch": name, "published_branch_head": head, "branch_base": base}
         )
-    new_files = []
-    for fe in bm["files"]:
-        e = _copy_entry(fe)
-        ap = _abs_path(broot, fe["path"])
-        e["path"] = ap if os.path.isabs(fe["path"]) else os.path.relpath(ap, root)
-        new_files.append(e)
-    if not new_files and mode == "append":
-        raise BranchError(f"branch {name!r}: empty inventory — nothing to append")
-    if mode == "append" and parent is not None:
-        from pyspark.sql.types import StructType
-
-        from ovalspark.sources.snapshots import _check_append_schema
-
-        _check_append_schema(
-            root,
-            _load_manifest_raw(root, parent),
-            StructType.fromJson(json.loads(bm["schema_json"])),
-        )
-    sid = 1 if parent is None else parent + 1
-    props = dict(properties or {})
-    props.update(
-        {"published_branch": name, "published_branch_head": head, "branch_base": base}
-    )
-    _commit_new_files(
-        root,
-        parent,
-        sid,
-        new_files,
-        mode,
-        bm["schema_ddl"],
-        bm["schema_json"],
-        properties=props,
-        guard=guard,
-    )
+        # the branch's files stay where they are: the txn stages nothing
+        # of its own, so a lost CAS leaves the branch untouched
+        sid = txn.commit_files(mode, new_files, bm, props)
     desc["published"] = {"main_sid": sid, "branch_head": head}
     _store_descriptor(root, name, desc, old=pre_desc)
     return sid

@@ -86,7 +86,6 @@ physical counts.
 from __future__ import annotations
 
 import os
-import shutil
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,13 +93,11 @@ from pyspark.sql import functions as F
 
 from ovalspark.sources.snapshots import (
     _abs_path,
-    _carry_layout,
-    _commit_manifest,
     _committed_schema,
     _expand_manifest,
     _load_manifest_raw,
+    _SnapshotTxn,
     _stats_comparable,
-    current_snapshot_id,
     snapshot_read,
     uniqueness_screen,
 )
@@ -277,81 +274,71 @@ def set_constraints(
     if mode not in ("replace", "add"):
         raise ValueError(f"mode must be replace|add, got {mode!r}")
     new = _normalize(constraints)
-    parent = current_snapshot_id(root)
-    if parent is None:
-        raise FileNotFoundError(
-            f"no committed snapshot at {root} — constraints are manifest "
-            f"state; commit the table's first snapshot, then attach them"
-        )
-    raw = _load_manifest_raw(root, parent)
-    cols = _columns_of(raw)
-    for c in new:
-        for col in c.get("columns", []) + ([c["column"]] if "column" in c else []):
-            if col not in cols:
+    with _SnapshotTxn(root, guard) as txn:
+        if txn.parent is None:
+            raise FileNotFoundError(
+                f"no committed snapshot at {root} — constraints are manifest "
+                f"state; commit the table's first snapshot, then attach them"
+            )
+        raw = txn.parent_raw
+        cols = _columns_of(raw)
+        for c in new:
+            for col in c.get("columns", []) + ([c["column"]] if "column" in c else []):
+                if col not in cols:
+                    raise ConstraintError(
+                        f"{c['name']}: column {col!r} not in committed "
+                        f"schema {sorted(cols)}"
+                    )
+            if c["kind"] == "ref" and not os.path.exists(c["ref_table"]):
                 raise ConstraintError(
-                    f"{c['name']}: column {col!r} not in committed "
-                    f"schema {sorted(cols)}"
+                    f"{c['name']}: ref_table {c['ref_table']!r} does not exist"
                 )
-        if c["kind"] == "ref" and not os.path.exists(c["ref_table"]):
-            raise ConstraintError(
-                f"{c['name']}: ref_table {c['ref_table']!r} does not exist"
-            )
-    need_baseline = [c for c in new if c["kind"] == "drift" and "baseline" not in c]
-    if need_baseline:
-        if spark is None:
-            raise ValueError(
-                "drift constraints need spark= — set_constraints captures "
-                "the baseline distribution from the current table"
-            )
-        base_df = snapshot_read(spark, root, snapshot_id=parent)
-        for c in need_baseline:
-            c["baseline"] = _capture_drift_baseline(base_df, c)
-    if mode == "add":
-        existing = list(raw.get("constraints") or [])
-        clash = {c["name"] for c in existing} & {c["name"] for c in new}
-        if clash:
-            raise ConstraintError(
-                f"constraint name(s) {sorted(clash)} already exist — "
-                f"drop_constraints first, or mode='replace'"
-            )
-        merged = existing + new
-        added = new
-    else:
-        merged = new
-        old = {c["name"]: c for c in raw.get("constraints") or []}
-        added = [c for c in new if old.get(c["name"]) != c]
-    if validate and added:
-        if spark is None:
-            raise ValueError(
-                "validate=True needs spark= to audit existing data "
-                "(pass validate=False to attach without auditing)"
-            )
-        _, detail = audit_constraints(spark, root, snapshot_id=parent, constraints=added)
-        bad = [r for r in detail["rows"] if r["violated_rows"]]
-        if bad:
-            raise ConstraintViolationError(
-                f"existing data violates new constraint(s): "
-                + ", ".join(f"{r['constraint']}={r['violated_rows']}" for r in bad),
-                bad,
-            )
-    sid = parent + 1
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": "set_constraints",
-        "schema_ddl": raw["schema_ddl"],
-        "schema_json": raw["schema_json"],
-        "total_rows": raw["total_rows"],
-        "total_bytes": raw["total_bytes"],
-        "files": raw["files"],
-        "constraints": merged,
-    }
-    for k in ("file_segments", "row_filters"):
-        if raw.get(k):
-            manifest[k] = raw[k]
-    _carry_layout(manifest, raw)
-    _commit_manifest(root, parent, sid, manifest, guard)
-    return sid
+        need_baseline = [c for c in new if c["kind"] == "drift" and "baseline" not in c]
+        if need_baseline:
+            if spark is None:
+                raise ValueError(
+                    "drift constraints need spark= — set_constraints captures "
+                    "the baseline distribution from the current table"
+                )
+            base_df = snapshot_read(spark, root, snapshot_id=txn.parent)
+            for c in need_baseline:
+                c["baseline"] = _capture_drift_baseline(base_df, c)
+        if mode == "add":
+            existing = list(raw.get("constraints") or [])
+            clash = {c["name"] for c in existing} & {c["name"] for c in new}
+            if clash:
+                raise ConstraintError(
+                    f"constraint name(s) {sorted(clash)} already exist — "
+                    f"drop_constraints first, or mode='replace'"
+                )
+            merged = existing + new
+            added = new
+        else:
+            merged = new
+            old = {c["name"]: c for c in raw.get("constraints") or []}
+            added = [c for c in new if old.get(c["name"]) != c]
+        if validate and added:
+            if spark is None:
+                raise ValueError(
+                    "validate=True needs spark= to audit existing data "
+                    "(pass validate=False to attach without auditing)"
+                )
+            _, detail = audit_constraints(spark, root, snapshot_id=txn.parent, constraints=added)
+            bad = [r for r in detail["rows"] if r["violated_rows"]]
+            if bad:
+                raise ConstraintViolationError(
+                    f"existing data violates new constraint(s): "
+                    + ", ".join(f"{r['constraint']}={r['violated_rows']}" for r in bad),
+                    bad,
+                )
+        return txn.commit(
+            "set_constraints",
+            raw["files"],
+            raw.get("file_segments") or [],
+            total_rows=raw["total_rows"],
+            constraints=merged,
+            row_filters=raw.get("row_filters"),
+        )
 
 
 def drop_constraints(root: str, names: list[str] | str, guard=None) -> int:
@@ -360,39 +347,23 @@ def drop_constraints(root: str, names: list[str] | str, guard=None) -> int:
     the rule ENFORCED)."""
     if isinstance(names, str):
         names = [names]
-    parent = current_snapshot_id(root)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    raw = _load_manifest_raw(root, parent)
-    existing = list(raw.get("constraints") or [])
-    have = {c["name"] for c in existing}
-    missing = [n for n in names if n not in have]
-    if missing:
-        raise ConstraintError(f"no such constraint(s): {missing} (table has {sorted(have)})")
-    kept = [c for c in existing if c["name"] not in set(names)]
-    sid = parent + 1
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": "set_constraints",
-        "schema_ddl": raw["schema_ddl"],
-        "schema_json": raw["schema_json"],
-        "total_rows": raw["total_rows"],
-        "total_bytes": raw["total_bytes"],
-        "files": raw["files"],
-    }
-    if kept:
-        manifest["constraints"] = kept
-    for k in ("file_segments", "row_filters"):
-        if raw.get(k):
-            manifest[k] = raw[k]
-    _carry_layout(manifest, raw)
-    # constraints are set explicitly above (or intentionally absent) —
-    # _carry_layout must not resurrect the dropped contract
-    if not kept:
-        manifest.pop("constraints", None)
-    _commit_manifest(root, parent, sid, manifest, guard)
-    return sid
+    with _SnapshotTxn(root, guard, require_parent=True) as txn:
+        raw = txn.parent_raw
+        existing = list(raw.get("constraints") or [])
+        have = {c["name"] for c in existing}
+        missing = [n for n in names if n not in have]
+        if missing:
+            raise ConstraintError(f"no such constraint(s): {missing} (table has {sorted(have)})")
+        kept = [c for c in existing if c["name"] not in set(names)]
+        return txn.commit(
+            "set_constraints",
+            raw["files"],
+            raw.get("file_segments") or [],
+            total_rows=raw["total_rows"],
+            # set explicitly (None = absent): the dropped contract is not carried
+            constraints=kept or None,
+            row_filters=raw.get("row_filters"),
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -1125,9 +1096,9 @@ def _enforce_staged(
 ) -> None:
     """Validate STAGED files against the parent's enforced constraints
     before the CAS — O(new data): footer stats first, one pushdown scan
-    of the staged files for the rest. Raises ``ConstraintViolationError``
-    AFTER removing the staged data dir, so a refused commit leaves the
-    table byte-identical.
+    of the staged files for the rest. Raises ``ConstraintViolationError``;
+    the committing ``_SnapshotTxn`` then removes the staged data dir, so a
+    refused commit leaves the table byte-identical.
 
     ``unique`` on an append additionally proves the staged keys hit
     nothing live: one column-pruned scan of the table's key column
@@ -1150,22 +1121,17 @@ def _enforce_staged(
             staged = spark.read.parquet(data_dir)
         return staged
 
-    try:
-        report = _delta_violations(
-            spark,
-            root,
-            cons,
-            new_files,
-            _staged,
-            mode,
-            parent_raw["snapshot_id"],
-            int(parent_raw.get("total_rows") or 0),
-        )
-    except ConstraintError:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise
+    report = _delta_violations(
+        spark,
+        root,
+        cons,
+        new_files,
+        _staged,
+        mode,
+        parent_raw["snapshot_id"],
+        int(parent_raw.get("total_rows") or 0),
+    )
     if report:
-        shutil.rmtree(data_dir, ignore_errors=True)
         raise ConstraintViolationError(
             "staged data violates enforced constraint(s): "
             + ", ".join(f"{r['constraint']}={r['violated_rows']}" for r in report)

@@ -18,15 +18,21 @@ metadata tree — with nothing but parquet and JSON:
                                              reference across manifests)
     <root>/manifest/CURRENT                  pointer to latest id (atomic)
 
-Commit protocol (optimistic, first-wins): write the new data files under
-a writer-PRIVATE snap dir (never touching previous files and never
-colliding with a concurrent writer's), then enter a short metadata
-critical section held under a pluggable ``CommitGuard``
-(``sources/commit_guard.py``): re-read CURRENT, and if another writer
-committed since this one resolved its parent, raise
-``ConcurrentCommitError`` (the loser's data dir is removed; the caller
-retries against the new state). Otherwise write ``v<id>.json`` (tmp +
-rename) and flip CURRENT. The guard covers only the metadata flip —
+Commit protocol (optimistic, first-wins): every commit is one
+``_SnapshotTxn``. It resolves the parent once, allocates the id, writes
+the new data files under a writer-PRIVATE snap dir (never touching
+previous files and never colliding with a concurrent writer's), then
+enters a short metadata critical section held under a pluggable
+``CommitGuard`` (``sources/commit_guard.py``): re-read CURRENT, and if
+another writer committed since this one resolved its parent, raise
+``ConcurrentCommitError`` (the caller retries against the new state).
+Otherwise write ``v<id>.json`` (tmp + rename) and flip CURRENT. A
+transaction that loses the CAS, raises before it, or exits without
+committing removes what it staged — its data dir and spilled segments,
+never files it did not stage. Once the CAS fails any OTHER way the
+outcome is unknown (the flip may have happened, and the published
+manifest may reference those files), so it removes nothing and leaves
+real debris to ``vacuum``. The guard covers only the metadata flip —
 milliseconds — never the data write. SCOPE: the default ``flock`` guard
 excludes writers on ONE host (kernel-released on death; right for
 local[] and driver-singleton deployments); the ``dirlock`` guard
@@ -73,7 +79,9 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import tempfile
+import uuid
 from functools import reduce
 from typing import Any
 
@@ -448,9 +456,7 @@ def _commit_manifest(
             # writer-unique manifest filename + catalog-recorded location:
             # concurrent writers' manifests can never alias, and a loser's
             # file is safe to unlink (nobody else can reference it)
-            import uuid as _uuid
-
-            loc = f"v{sid}-{_uuid.uuid4().hex[:8]}.json"
+            loc = f"v{sid}-{uuid.uuid4().hex[:8]}.json"
             mpath = os.path.join(_manifest_dir(root), loc)
             _atomic_write(mpath, payload)
             if not _catalog_cas(root, parent, sid, loc, token if g.owns_pointer else None):
@@ -608,9 +614,7 @@ def _spill_segment(root: str, sid: int, entries: list[dict[str, Any]]) -> dict[s
     keep-by-reference maintenance never need to expand it. Written BEFORE
     the commit CAS (same lifecycle as data files): a loser's or torn
     commit's segment is unreferenced debris that ``vacuum`` reclaims."""
-    import uuid as _uuid
-
-    loc = f"seg-{sid}-{_uuid.uuid4().hex[:8]}.json"
+    loc = f"seg-{sid}-{uuid.uuid4().hex[:8]}.json"
     _atomic_write(os.path.join(_manifest_dir(root), loc), json.dumps(entries))
     ref = {
         "loc": loc,
@@ -831,9 +835,6 @@ def _sampled_size_estimate(df: DataFrame, sample_rows: int = 1024) -> int:
     bytes/row, scale by the row count. The input must already be
     localCheckpoint'ed (the caller's count/write share that
     materialization; the sample write here reads the same blocks)."""
-    import shutil
-    import tempfile
-
     import pyarrow.parquet as pq
 
     rows = df.count()
@@ -933,6 +934,261 @@ def _check_append_schema(root: str, parent_manifest: dict, schema) -> None:
             )
 
 
+_LAYOUT_KEYS = ("sort_by", "zorder")
+
+
+def _carry_layout(
+    manifest: dict[str, Any],
+    parent_m: dict[str, Any] | None,
+    op_fields,
+    reset_layout: bool,
+) -> None:
+    """THE carry rule: which table-level declarations a commit inherits
+    from its parent manifest. ``op_fields`` names the fields the
+    committing op sets itself (a None value counts: it sets the field
+    absent).
+
+    The CONSTRAINT contract (``sources/constraints.py``) always carries
+    — replacing the data does not void the rules it must satisfy — unless
+    the op sets it: ``set_constraints``, ``drop_constraints`` (which must
+    not resurrect a dropped contract). ``rollback_table`` keeps CURRENT's,
+    which is its parent's, so the default carry is its rule too.
+
+    The DECLARED layout — ``sort_by`` / ``zorder``, like Iceberg's table
+    sort order — carries as ONE declaration through every commit that
+    does not re-cluster: appends (an unsorted append breaks file
+    conformance, not the declaration; ``cluster_incremental`` reads it
+    to know which layout to restore), deletes, upserts, materialization,
+    segment merges, contract changes. An overwrite or a layout-destroying
+    bin-pack compact (``reset_layout``) drops it. An op that sets either
+    key itself carries neither: ``sort_rewrite``, ``cluster_incremental``,
+    an append passing ``sort_by``, and ``rollback_table`` (which takes
+    its target's)."""
+    if not parent_m:
+        return
+    if "constraints" not in op_fields and parent_m.get("constraints"):
+        manifest["constraints"] = parent_m["constraints"]
+    if reset_layout or any(k in op_fields for k in _LAYOUT_KEYS):
+        return
+    for k in _LAYOUT_KEYS:
+        if parent_m.get(k):
+            manifest[k] = parent_m[k]
+
+
+class _SnapshotTxn:
+    """One snapshot commit — the sid / data-dir / spill / CAS / cleanup
+    path every write operation shares. An op keeps only what is its own:
+    which files it writes and which manifest fields it sets::
+
+        with _SnapshotTxn(root, guard, require_parent=True) as txn:
+            new = txn.write(df)  # data/snap-<sid>-<uuid8>
+            segs, keep = txn.spill(segs, keep, new)
+            return txn.commit("replace", keep + new, segs)
+
+    The parent and ``sid`` are resolved once, at construction; the
+    parent's raw manifest is loaded at most once (``parent_raw``). On
+    exit without a commit — the body raised, returned early, or lost the
+    CAS with ``ConcurrentCommitError`` — the txn removes its data dir and
+    every segment it spilled. If the CAS raises anything else the outcome
+    is unknown (the flip may have happened and the published manifest
+    may reference those files), so nothing is removed. Files an op did
+    not stage through the txn are never touched."""
+
+    def __init__(self, root: str, guard=None, require_parent: bool = False):
+        self.root = root
+        self.guard = guard
+        self.parent = current_snapshot_id(root)
+        if require_parent and self.parent is None:
+            raise FileNotFoundError(f"no committed snapshot at {root}")
+        self.sid = 1 if self.parent is None else self.parent + 1
+        self._parent_raw: dict[str, Any] | None = None
+        self._data_dir: str | None = None
+        self._segments: list[str] = []  # locs of the segments this txn spilled
+        self._keep = False  # committed, or the CAS outcome is unknown
+
+    def __enter__(self) -> _SnapshotTxn:
+        return self
+
+    def __exit__(self, *exc) -> bool:
+        if not self._keep:
+            if self._data_dir is not None:
+                shutil.rmtree(self._data_dir, ignore_errors=True)
+            for loc in self._segments:
+                try:
+                    os.unlink(os.path.join(_manifest_dir(self.root), loc))
+                except OSError:
+                    pass
+        return False
+
+    @property
+    def parent_raw(self) -> dict[str, Any] | None:
+        """The parent's RAW manifest (None for a first commit)."""
+        if self._parent_raw is None and self.parent is not None:
+            self._parent_raw = _load_manifest_raw(self.root, self.parent)
+        return self._parent_raw
+
+    @property
+    def data_dir(self) -> str:
+        """The commit's writer-PRIVATE data dir, named on first use:
+        concurrent writers racing toward the same sid write disjoint dirs,
+        so a loser's files never alias the winner's. A torn commit leaves
+        an unreferenced dir — never resolvable once load_manifest refuses
+        ids past CURRENT; ``vacuum`` reclaims it."""
+        if self._data_dir is None:
+            self._data_dir = os.path.join(
+                self.root, "data", f"snap-{self.sid}-{uuid.uuid4().hex[:8]}"
+            )
+        return self._data_dir
+
+    def write(self, df: DataFrame, drop_empty: bool = False) -> list[dict[str, Any]]:
+        """Write ``df`` into the data dir; its files' footer entries.
+        ``drop_empty`` leaves out files with no rows (a rewrite that
+        filtered a whole file away contributes nothing)."""
+        df.write.mode("error").parquet(self.data_dir)
+        files = _footer_stats(glob.glob(os.path.join(self.data_dir, "part-*.parquet")), self.root)
+        return [fe for fe in files if fe["rows"] > 0] if drop_empty else files
+
+    def sidecar(self, name: str, df: DataFrame) -> dict[str, Any]:
+        """Write a doc-id sidecar (``df``, one ``doc_id`` column) inside
+        the data dir and return its manifest record ``{loc, n_docs}``,
+        the row count taken from parquet footers. The leading underscore
+        of ``name`` keeps it out of Spark's discovery over the data dir
+        (and out of the part-* glob)."""
+        import pyarrow.parquet as pq
+
+        d = os.path.join(self.data_dir, name)
+        df.write.mode("error").parquet(d)
+        n = sum(
+            pq.ParquetFile(p).metadata.num_rows
+            for p in glob.glob(os.path.join(d, "part-*.parquet"))
+        )
+        return {"loc": os.path.relpath(d, self.root), "n_docs": int(n)}
+
+    def inherit_indexes(self, spark: SparkSession, new_files: list[dict[str, Any]]) -> None:
+        """Recompute, for an engine-owned rewrite's files, the sketch and
+        bloom columns present on ANY of the parent's entries — maintenance
+        never silently degrades the table's sketch or probe coverage (user
+        appends choose explicitly via ``sketch_cols``/``bloom_cols``;
+        partial coverage is reported, not extrapolated)."""
+        sketch: set[str] = set()
+        bloom: set[str] = set()
+        for fe in _expand_manifest(self.root, self.parent_raw)["files"]:
+            sketch.update((fe.get("hll") or {}).keys())
+            bloom.update((fe.get("bloom") or {}).keys())
+        if sketch:
+            _attach_sketches(spark, self.root, new_files, sorted(sketch))
+        if bloom:
+            _attach_blooms(spark, self.root, new_files, sorted(bloom))
+
+    def segment(self, entries: list[dict[str, Any]]) -> dict[str, Any]:
+        """Spill ``entries`` into a segment owned by this txn."""
+        ref = _spill_segment(self.root, self.sid, entries)
+        self._segments.append(ref["loc"])
+        return ref
+
+    def spill(
+        self, segments, carried: list[dict[str, Any]], new: list[dict[str, Any]]
+    ) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
+        """The one spill rule: when carried inline entries exist and
+        carried + new would exceed ``_SEGMENT_SPILL_ENTRIES``, the carried
+        entries become one segment. Returns ``(segments, carried)`` — the
+        op lists ``carried + new`` inline."""
+        if carried and len(carried) + len(new) > _SEGMENT_SPILL_ENTRIES:
+            return list(segments) + [self.segment(carried)], []
+        return list(segments), list(carried)
+
+    def commit_files(
+        self,
+        mode: str,
+        new_files: list[dict[str, Any]],
+        schema,
+        properties: dict | None = None,
+        **fields,
+    ) -> int:
+        """Commit ``new_files`` as an ``overwrite`` (they are the whole
+        table) or an ``append`` (O(added) metadata: the parent's segments
+        carry BY REFERENCE and its inline tail is concatenated until it
+        spills — an append never re-serializes the cumulative file list).
+        Pending merge-on-read filters carry VERBATIM on append: their
+        scopes name files by path (stable under the spill) and segments by
+        immutable loc, so the appended files are outside every scope and
+        new rows matching an old delete predicate are not deleted."""
+        p = self.parent_raw if mode == "append" else None
+        segments: list[dict[str, Any]] = []
+        carried: list[dict[str, Any]] = []
+        filters = total_rows = None
+        if p is not None:
+            segments, carried = self.spill(p.get("file_segments") or [], p["files"], new_files)
+            filters = p.get("row_filters") or None
+            if filters:
+                # entry rows are PHYSICAL; with filters pending the logical
+                # count is the parent's (net of MoR deletes) plus the append
+                total_rows = p["total_rows"] + sum(f["rows"] for f in new_files)
+        return self.commit(
+            mode,
+            carried + new_files,
+            segments,
+            schema=schema,
+            total_rows=total_rows,
+            reset_layout=mode != "append",
+            row_filters=filters,
+            properties=dict(properties) if properties else None,
+            **fields,
+        )
+
+    def commit(
+        self,
+        operation: str,
+        files: list[dict[str, Any]],
+        segments=(),
+        *,
+        schema=None,
+        total_rows: int | None = None,
+        reset_layout: bool = False,
+        **fields,
+    ) -> int:
+        """Assemble the manifest and CAS it in; returns the new id.
+        ``schema``: a StructType, or a manifest whose recorded schema is
+        taken (default: the parent's). Totals are the physical sums over
+        ``segments`` and ``files``; ``total_rows`` overrides with the
+        logical count where pending row filters hide rows. ``fields`` are
+        the op's own keys, set verbatim except that None omits one (a
+        Column-predicate delete still records ``delete_predicate`` null).
+        Constraints and layout follow ``_carry_layout``. The CAS is the
+        module's ``_commit_manifest``, looked up at call time."""
+        src = self.parent_raw if schema is None else schema
+        if isinstance(src, dict):
+            ddl, sjson = src["schema_ddl"], src["schema_json"]
+        else:
+            ddl, sjson = src.simpleString(), src.json()
+        segments = list(segments)
+        m = {
+            "snapshot_id": self.sid,
+            "parent_id": self.parent,
+            "operation": operation,
+            "schema_ddl": ddl,
+            "schema_json": sjson,
+            "total_rows": total_rows
+            if total_rows is not None
+            else sum(s["rows"] for s in segments) + sum(f["rows"] for f in files),
+            "total_bytes": sum(s["bytes"] for s in segments) + sum(f["bytes"] for f in files),
+            "files": files,
+        }
+        if segments:
+            m["file_segments"] = segments
+        _carry_layout(m, self.parent_raw, fields, reset_layout)
+        m.update((k, v) for k, v in fields.items() if v is not None or k == "delete_predicate")
+        try:
+            _commit_manifest(self.root, self.parent, self.sid, m, self.guard)
+        except ConcurrentCommitError:
+            raise
+        except BaseException:
+            self._keep = True  # outcome unknown: the flip may have happened
+            raise
+        self._keep = True
+        return self.sid
+
+
 def snapshot_write(
     df: DataFrame,
     root: str,
@@ -1013,9 +1269,6 @@ def snapshot_write(
     manifest metadata). Keep it to scalars: this rides the manifest
     JSON, read on every resolution.
     """
-    import shutil
-    import uuid
-
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     if sort_by is not None and isinstance(sort_by, str):
@@ -1032,214 +1285,60 @@ def snapshot_write(
             raise ValueError(f"bloom_cols column(s) {missing} not in frame {df.columns}")
         if not 0 < bloom_fpp < 1:
             raise ValueError(f"bloom_fpp must be in (0, 1), got {bloom_fpp}")
-    parent = current_snapshot_id(root)
-    if mode == "append" and parent is not None:
-        _check_append_schema(root, _load_manifest_raw(root, parent), df.schema)
-    n_files = None
-    if target_file_mb is not None:
-        est_bytes = None
-        if parent is not None:
-            m = _load_manifest_raw(root, parent)
-            if m["total_rows"]:
+    with _SnapshotTxn(root, guard) as txn:
+        pm = txn.parent_raw
+        if mode == "append" and pm is not None:
+            _check_append_schema(root, pm, df.schema)
+        n_files = None
+        if target_file_mb is not None:
+            est_bytes = None
+            if pm is not None and pm["total_rows"]:
                 # the row count needs one materialization of the incoming
                 # plan — checkpoint first so the count reads materialized
                 # blocks and the parquet write below reuses them (ONE
                 # upstream execution total, not two)
                 df = df.localCheckpoint()
-                est_bytes = int(m["total_bytes"] / m["total_rows"] * df.count())
-        if est_bytes is None:
-            est_bytes = _plan_size_estimate(df)
-        if est_bytes is None:
-            df = df.localCheckpoint()
-            est_bytes = _sampled_size_estimate(df)
-        n_files = max(1, -(-est_bytes // (target_file_mb * 1024 * 1024)))
-    if sort_by:
-        # CLUSTERED layout: range-partition on the sort key so per-file
-        # [min, max] footer bounds are (near-)disjoint — a point/range
-        # prune then touches O(selected range) files instead of O(all)
-        # (every file of a hash/random layout spans the whole key range,
-        # making min/max skipping useless on high-cardinality keys). The
-        # within-partition sort additionally tightens parquet row-group
-        # stats for scan-time skipping.
-        if n_files is None:
-            n_files = df.rdd.getNumPartitions() or 1
-        df = df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(*sort_by)
-    elif n_files is not None:
-        df = df.repartition(n_files)
-    sid = 1 if parent is None else parent + 1
-    # Private data dir: concurrent writers racing toward the same sid write
-    # disjoint dirs, so the loser's files never alias the winner's. A torn
-    # commit leaves an unreferenced dir — harmless (never resolvable once
-    # load_manifest refuses ids past CURRENT); ``vacuum`` reclaims them.
-    data_dir = os.path.join(root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-    df.write.mode("error").parquet(data_dir)
-    new_files = _footer_stats(glob.glob(os.path.join(data_dir, "part-*.parquet")), root)
-    if parent is not None:
-        pm_enf = _load_manifest_raw(root, parent)
-        if pm_enf.get("constraints"):
+                est_bytes = int(pm["total_bytes"] / pm["total_rows"] * df.count())
+            if est_bytes is None:
+                est_bytes = _plan_size_estimate(df)
+            if est_bytes is None:
+                df = df.localCheckpoint()
+                est_bytes = _sampled_size_estimate(df)
+            n_files = max(1, -(-est_bytes // (target_file_mb * 1024 * 1024)))
+        if sort_by:
+            # CLUSTERED layout: range-partition on the sort key so per-file
+            # [min, max] footer bounds are (near-)disjoint — a point/range
+            # prune then touches O(selected range) files instead of O(all)
+            # (every file of a hash/random layout spans the whole key range,
+            # making min/max skipping useless on high-cardinality keys). The
+            # within-partition sort additionally tightens parquet row-group
+            # stats for scan-time skipping.
+            if n_files is None:
+                n_files = df.rdd.getNumPartitions() or 1
+            df = df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(*sort_by)
+        elif n_files is not None:
+            df = df.repartition(n_files)
+        new_files = txn.write(df)
+        if pm is not None and pm.get("constraints"):
             # commit-time contract enforcement: O(staged) — footer stats
             # first, one pushdown scan of the staged files for the rest;
-            # removes data_dir and raises ConstraintViolationError on a
-            # violation (constraints.py module doc). Runs BEFORE the
-            # sketch/bloom scans so a refused commit never pays them.
+            # raises ConstraintViolationError on a violation (constraints.py
+            # module doc). Runs BEFORE the sketch/bloom scans so a refused
+            # commit never pays them.
             from ovalspark.sources.constraints import _enforce_staged
 
-            _enforce_staged(df.sparkSession, root, pm_enf, new_files, data_dir, mode)
-    if sketch_cols:
-        _attach_sketches(df.sparkSession, root, new_files, sketch_cols)
-    if bloom_cols:
-        _attach_blooms(df.sparkSession, root, new_files, bloom_cols, bloom_fpp)
-    manifest_extra: dict[str, Any] = {}
-    if expect is not None:
-        import pyarrow.parquet as pq
-
-        # the leading underscore keeps the sidecar invisible to Spark's
-        # parquet discovery over the data dir (and to our own part-* glob)
-        expect_dir = os.path.join(data_dir, "_expect")
-        expect.select("doc_id").write.mode("error").parquet(expect_dir)
-        n_expected = sum(
-            pq.ParquetFile(p).metadata.num_rows
-            for p in glob.glob(os.path.join(expect_dir, "part-*.parquet"))
-        )
-        manifest_extra["expect"] = {
-            "loc": os.path.relpath(expect_dir, root),
-            "n_docs": int(n_expected),
-        }
-    if sort_by:
-        # informational + audit: which key this COMMIT's files cluster on
-        manifest_extra["sort_by"] = list(sort_by)
-    return _commit_new_files(
-        root,
-        parent,
-        sid,
-        new_files,
-        mode,
-        df.schema.simpleString(),
-        df.schema.json(),
-        properties=properties,
-        guard=guard,
-        manifest_extra=manifest_extra,
-        cleanup_dirs=(data_dir,),
-    )
-
-
-def _carry_layout(manifest: dict[str, Any], parent_m: dict[str, Any]) -> None:
-    """Engine commits that do not re-cluster carry the table's DECLARED
-    layout markers forward: deletes filter files in place (order-
-    preserving), upserts append, materialization filters, segment merges
-    touch only metadata — the declaration outlives all of them, exactly
-    like Iceberg's table sort order. Only an explicit overwrite or a
-    layout-destroying bin-pack compact resets it.
-
-    The CONSTRAINT contract (``sources/constraints.py``) carries the
-    same way but stronger: it survives every commit kind including
-    overwrites (replacing the data does not void the rules it must
-    satisfy) — only ``drop_constraints`` removes it."""
-    for k in ("sort_by", "zorder", "constraints"):
-        if parent_m.get(k) and k not in manifest:
-            manifest[k] = parent_m[k]
-
-
-def _commit_new_files(
-    root: str,
-    parent: int | None,
-    sid: int,
-    new_files: list[dict[str, Any]],
-    mode: str,
-    schema_ddl: str,
-    schema_json: str,
-    properties: dict | None = None,
-    guard=None,
-    manifest_extra: dict | None = None,
-    cleanup_dirs: tuple = (),
-) -> int:
-    """The Spark-free second half of a snapshot commit, shared by
-    ``snapshot_write`` and ``commit_staged_files``: append-mode segment
-    carry/spill, totals, manifest assembly, and the guarded CAS with
-    loser cleanup (data dirs + this writer's spill)."""
-    import shutil
-
-    inline = list(new_files)
-    segments: list[dict] = []
-    spilled_loc: str | None = None
-    carried_filters: list[dict] | None = None
-    parent_raw: dict[str, Any] | None = None
-    if parent is not None and mode != "append":
-        # overwrite replaces the DATA, not the contract: the constraint
-        # declaration must carry (append mode loads the parent below)
-        parent_raw = _load_manifest_raw(root, parent)
-    if mode == "append" and parent is not None:
-        # O(added) metadata: parent's segments carry into this manifest BY
-        # REFERENCE; its inline tail is concatenated until it would
-        # outgrow the spill point, then moves into ONE immutable segment
-        # file — an append never re-serializes the cumulative file list
-        pm_raw = _load_manifest_raw(root, parent)
-        parent_raw = pm_raw
-        segments = list(pm_raw.get("file_segments") or [])
-        parent_inline = pm_raw["files"]
-        # pending merge-on-read filters carry VERBATIM: their scopes name
-        # files by path (stable under the spill below) and segments by
-        # immutable loc — the appended files are outside every scope, so
-        # new rows matching an old delete predicate are not deleted
-        carried_filters = list(pm_raw.get("row_filters") or []) or None
-        if parent_inline and len(parent_inline) + len(inline) > _SEGMENT_SPILL_ENTRIES:
-            ref = _spill_segment(root, sid, parent_inline)
-            spilled_loc = ref["loc"]
-            segments.append(ref)
-        else:
-            inline = parent_inline + inline
-        # the table's DECLARED sort layout persists across appends (like
-        # Iceberg's table sort order): an unsorted append breaks file
-        # conformance, not the declaration — cluster_incremental reads it
-        # to know which layout to restore. An append passing its own
-        # sort_by (manifest_extra) overrides.
-        if pm_raw.get("sort_by") and "sort_by" not in (manifest_extra or {}):
-            manifest_extra = dict(manifest_extra or {})
-            manifest_extra["sort_by"] = pm_raw["sort_by"]
-    total_rows = sum(s["rows"] for s in segments) + sum(f["rows"] for f in inline)
-    total_bytes = sum(s["bytes"] for s in segments) + sum(f["bytes"] for f in inline)
-    if carried_filters:
-        # entry rows are PHYSICAL; with filters pending the table's
-        # logical count is the parent's (already net of MoR deletes)
-        # plus what this append added
-        total_rows = pm_raw["total_rows"] + sum(f["rows"] for f in new_files)
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": mode,
-        "schema_ddl": schema_ddl,
-        "schema_json": schema_json,
-        "total_rows": total_rows,
-        "total_bytes": total_bytes,
-        "files": inline,
-    }
-    if carried_filters:
-        manifest["row_filters"] = carried_filters
-    if segments:
-        manifest["file_segments"] = segments
-    if properties:
-        manifest["properties"] = dict(properties)
-    if manifest_extra:
-        manifest.update(manifest_extra)
-    if parent_raw is not None and parent_raw.get("constraints"):
-        # unlike the sort layout (which an overwrite RESETS), the
-        # constraint contract survives every commit kind — replacing
-        # the data does not void the rules it must satisfy
-        manifest.setdefault("constraints", parent_raw["constraints"])
-    try:
-        _commit_manifest(root, parent, sid, manifest, guard)
-    except ConcurrentCommitError:
-        for d in cleanup_dirs:
-            shutil.rmtree(d, ignore_errors=True)
-        if spilled_loc is not None:
-            # this writer's spill is debris once its commit lost — the
-            # winner spills the same parent inline itself if it needs to
-            try:
-                os.unlink(os.path.join(_manifest_dir(root), spilled_loc))
-            except OSError:
-                pass
-        raise
-    return sid
+            _enforce_staged(df.sparkSession, root, pm, new_files, txn.data_dir, mode)
+        if sketch_cols:
+            _attach_sketches(df.sparkSession, root, new_files, sketch_cols)
+        if bloom_cols:
+            _attach_blooms(df.sparkSession, root, new_files, bloom_cols, bloom_fpp)
+        extra: dict[str, Any] = {}
+        if expect is not None:
+            extra["expect"] = txn.sidecar("_expect", expect.select("doc_id"))
+        if sort_by:
+            # informational + audit: which key this COMMIT's files cluster on
+            extra["sort_by"] = list(sort_by)
+        return txn.commit_files(mode, new_files, df.schema, properties, **extra)
 
 
 def commit_staged_files(
@@ -1264,22 +1363,10 @@ def commit_staged_files(
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     if not paths:
         raise ValueError("commit_staged_files requires at least one file")
-    parent = current_snapshot_id(root)
-    if mode == "append" and parent is not None:
-        _check_append_schema(root, _load_manifest_raw(root, parent), schema)
-    sid = 1 if parent is None else parent + 1
-    new_files = _footer_stats(list(paths), root)
-    return _commit_new_files(
-        root,
-        parent,
-        sid,
-        new_files,
-        mode,
-        schema.simpleString(),
-        schema.json(),
-        properties=properties,
-        guard=guard,
-    )
+    with _SnapshotTxn(root, guard) as txn:
+        if mode == "append" and txn.parent_raw is not None:
+            _check_append_schema(root, txn.parent_raw, schema)
+        return txn.commit_files(mode, _footer_stats(list(paths), root), schema, properties)
 
 
 def read_expected_docs(
@@ -1396,9 +1483,6 @@ def snapshot_delete(
     discipline and ``materialize_deletes`` for paying the deferred
     rewrite. MoR requires a SQL-string predicate (a Column has no
     faithful serialization to re-apply at read time)."""
-    import shutil
-    import uuid
-
     from pyspark.sql import Column
 
     if strategy not in ("copy-on-write", "merge-on-read"):
@@ -1424,154 +1508,112 @@ def snapshot_delete(
         # delete would silently report "nothing matched" while matching
         # rows survive — invalid maintenance values must raise loudly
         raise ValueError(f"discovery_cap must be >= 1, got {discovery_cap}")
-    parent = current_snapshot_id(root)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    m = load_manifest(root, parent)
-    if m.get("row_filters"):
-        # a CoW rewrite reads affected files RAW and re-emits survivors
-        # as new files outside every pending filter's scope — previously
-        # MoR-deleted rows in those files would silently RESURRECT
-        raise ValueError(
-            f"table at {root} has {len(m['row_filters'])} merge-on-read "
-            f"delete filter(s) pending — a copy-on-write delete would "
-            f"resurrect MoR-deleted rows in the files it rewrites; run "
-            f"materialize_deletes first, or stack another "
-            f"strategy='merge-on-read' delete"
+    with _SnapshotTxn(root, guard, require_parent=True) as txn:
+        parent = txn.parent
+        m = _expand_manifest(root, txn.parent_raw)
+        if m.get("row_filters"):
+            # a CoW rewrite reads affected files RAW and re-emits survivors
+            # as new files outside every pending filter's scope — previously
+            # MoR-deleted rows in those files would silently RESURRECT
+            raise ValueError(
+                f"table at {root} has {len(m['row_filters'])} merge-on-read "
+                f"delete filter(s) pending — a copy-on-write delete would "
+                f"resurrect MoR-deleted rows in the files it rewrites; run "
+                f"materialize_deletes first, or stack another "
+                f"strategy='merge-on-read' delete"
+            )
+        if prune is not None:
+            # caller-supplied range bounds implied by the predicate: the
+            # discovery scan opens only files whose manifest column bounds
+            # overlap (prune_files) — at 10⁶ files a range-shaped delete
+            # discovers against a handful of files, not the table. Sound
+            # only if the ranges really cover the predicate; the caller owns
+            # that claim (there is no general predicate→range analyzer here).
+            paths = prune_files(root, parent, prune)
+        else:
+            paths = [_abs_path(root, f["path"]) for f in m["files"]]
+        if not paths:
+            return parent
+        pred_sql = None if isinstance(predicate, Column) else str(predicate)
+        pred = predicate if isinstance(predicate, Column) else F.expr(predicate)
+        # Bounded discovery: the affected-basename set lives on the DRIVER,
+        # so cap what gets collected — limit(cap+1) bounds the transfer in
+        # the same single scan. Overflow means more than half the scanned
+        # files contain matches (a delete-everything-shaped predicate): skip
+        # the name set entirely and rewrite every scanned file — at that hit
+        # rate at least half needed rewriting anyway (≤2× the selective IO),
+        # and the driver never builds a set proportional to the table.
+        # ``discovery_cap`` overrides the default max(1000, half the scanned
+        # files) — deployments with tight driver memory can lower it.
+        cap = discovery_cap if discovery_cap is not None else max(1000, len(paths) // 2)
+        hit_rows = (
+            _delete_discovery_frame(spark, paths, pred, _committed_schema(m))
+            .limit(cap + 1)
+            .collect()
         )
-    if prune is not None:
-        # caller-supplied range bounds implied by the predicate: the
-        # discovery scan opens only files whose manifest column bounds
-        # overlap (prune_files) — at 10⁶ files a range-shaped delete
-        # discovers against a handful of files, not the table. Sound
-        # only if the ranges really cover the predicate; the caller owns
-        # that claim (there is no general predicate→range analyzer here).
-        paths = prune_files(root, parent, prune)
-    else:
-        paths = [_abs_path(root, f["path"]) for f in m["files"]]
-    if not paths:
-        return parent
-    pred_sql = None if isinstance(predicate, Column) else str(predicate)
-    pred = predicate if isinstance(predicate, Column) else F.expr(predicate)
-    # Bounded discovery: the affected-basename set lives on the DRIVER,
-    # so cap what gets collected — limit(cap+1) bounds the transfer in
-    # the same single scan. Overflow means more than half the scanned
-    # files contain matches (a delete-everything-shaped predicate): skip
-    # the name set entirely and rewrite every scanned file — at that hit
-    # rate at least half needed rewriting anyway (≤2× the selective IO),
-    # and the driver never builds a set proportional to the table.
-    # ``discovery_cap`` overrides the default max(1000, half the scanned
-    # files) — deployments with tight driver memory can lower it.
-    cap = discovery_cap if discovery_cap is not None else max(1000, len(paths) // 2)
-    hit_rows = (
-        _delete_discovery_frame(spark, paths, pred, _committed_schema(m))
-        .limit(cap + 1)
-        .collect()
-    )
-    # survivors = NOT(pred IS TRUE): rows where pred is NULL are KEPT
-    # (SQL DELETE semantics), so THIS side genuinely needs the coalesce
-    hit = F.coalesce(pred.cast("boolean"), F.lit(False))
-    if not hit_rows:
-        return parent
-    if len(hit_rows) > cap:
-        affected = {os.path.basename(p) for p in paths}
-        rewrite = list(paths)
-    else:
-        affected = {r["_f"] for r in hit_rows}
-        rewrite = [
-            _abs_path(root, f["path"])
-            for f in m["files"]
-            if os.path.basename(f["path"]) in affected
-        ]
-    # child metadata from the RAW parent: segments untouched by the
-    # rewrite carry by reference, so a selective delete writes O(affected
-    # + segments) manifest bytes, not O(table)
-    kept_segs, keep = _partition_metadata(root, _load_manifest_raw(root, parent), affected)
-    sid = parent + 1
-    data_dir = os.path.join(root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-    # committed schema on the rewrite read: a delete across an additive
-    # schema evolution must not NARROW the rewritten files to whatever
-    # pre-evolution shape inference sampled
-    survivors = spark.read.schema(_committed_schema(m)).parquet(*rewrite).filter(~hit)
-    survivors.write.mode("error").parquet(data_dir)
-    new_files = [
-        fe
-        for fe in _footer_stats(glob.glob(os.path.join(data_dir, "part-*.parquet")), root)
-        if fe["rows"] > 0  # an all-deleted file contributes nothing
-    ]
-    inline = keep + new_files
-    spilled_loc: str | None = None
-    if keep and len(inline) > _SEGMENT_SPILL_ENTRIES:
-        ref = _spill_segment(root, sid, keep)
-        spilled_loc = ref["loc"]
-        kept_segs = kept_segs + [ref]
-        inline = list(new_files)
-    total_rows = sum(s["rows"] for s in kept_segs) + sum(f["rows"] for f in inline)
-    total_bytes = sum(s["bytes"] for s in kept_segs) + sum(f["bytes"] for f in inline)
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": "delete",
-        "schema_ddl": survivors.schema.simpleString(),
-        "schema_json": survivors.schema.json(),
-        "total_rows": total_rows,
-        "total_bytes": total_bytes,
-        "deleted_rows": m["total_rows"] - total_rows,
-        # SQL-string predicates are recorded so the commit is auditable
-        # and re-checkable (validate_delete's read-back); Column
-        # predicates have no faithful serialization — recorded as None
-        "delete_predicate": pred_sql,
-        "files": inline,
-    }
-    if kept_segs:
-        manifest["file_segments"] = kept_segs
-    if pred_sql is None and "doc_id" in survivors.columns:
-        # A Column predicate cannot be re-evaluated later, which would
-        # leave this commit the ONE delete the tail cannot read-back
-        # verify (oval's delete path always verifies,
-        # internal/runner/worker.go:191-232). Persist the matched
-        # doc_id set instead — the expect-sidecar mechanism, inverted:
-        # the manifest names the docs the writer claims to have removed,
-        # and verification becomes a semi-join of survivors against the
-        # set, self-contained with no predicate. O(deleted rows) extra
-        # IO, one more pushdown-filtered scan of the already-affected
-        # files. Exact for doc_id-keyed tables (this library's data
-        # model); a multi-row-per-doc table partially deleted by the
-        # predicate would over-report — such callers should pass SQL.
-        deleted_dir = os.path.join(data_dir, "_deleted")
-        (
-            spark.read.schema(_committed_schema(m))
-            .parquet(*rewrite)
-            # plain filter(pred), not the coalesce wrapper: same rows
-            # (filter drops NULLs) and it reaches the scan as
-            # PushedFilters — the _delete_discovery_frame reasoning
-            .filter(pred)
-            .select(F.col("doc_id").cast("string").alias("doc_id"))
-            .write.mode("error")
-            .parquet(deleted_dir)
+        # survivors = NOT(pred IS TRUE): rows where pred is NULL are KEPT
+        # (SQL DELETE semantics), so THIS side genuinely needs the coalesce
+        hit = F.coalesce(pred.cast("boolean"), F.lit(False))
+        if not hit_rows:
+            return parent
+        if len(hit_rows) > cap:
+            affected = {os.path.basename(p) for p in paths}
+            rewrite = list(paths)
+        else:
+            affected = {r["_f"] for r in hit_rows}
+            rewrite = [
+                _abs_path(root, f["path"])
+                for f in m["files"]
+                if os.path.basename(f["path"]) in affected
+            ]
+        # child metadata from the RAW parent: segments untouched by the
+        # rewrite carry by reference, so a selective delete writes O(affected
+        # + segments) manifest bytes, not O(table)
+        kept_segs, keep = _partition_metadata(root, txn.parent_raw, affected)
+        # committed schema on the rewrite read: a delete across an additive
+        # schema evolution must not NARROW the rewritten files to whatever
+        # pre-evolution shape inference sampled
+        survivors = spark.read.schema(_committed_schema(m)).parquet(*rewrite).filter(~hit)
+        new_files = txn.write(survivors, drop_empty=True)
+        segments, keep = txn.spill(kept_segs, keep, new_files)
+        deleted_docs = None
+        if pred_sql is None and "doc_id" in survivors.columns:
+            # A Column predicate cannot be re-evaluated later, which would
+            # leave this commit the ONE delete the tail cannot read-back
+            # verify (oval's delete path always verifies,
+            # internal/runner/worker.go:191-232). Persist the matched
+            # doc_id set instead — the expect-sidecar mechanism, inverted:
+            # the manifest names the docs the writer claims to have removed,
+            # and verification becomes a semi-join of survivors against the
+            # set, self-contained with no predicate. O(deleted rows) extra
+            # IO, one more pushdown-filtered scan of the already-affected
+            # files. Exact for doc_id-keyed tables (this library's data
+            # model); a multi-row-per-doc table partially deleted by the
+            # predicate would over-report — such callers should pass SQL.
+            deleted_docs = txn.sidecar(
+                "_deleted",
+                spark.read.schema(_committed_schema(m))
+                .parquet(*rewrite)
+                # plain filter(pred), not the coalesce wrapper: same rows
+                # (filter drops NULLs) and it reaches the scan as
+                # PushedFilters — the _delete_discovery_frame reasoning
+                .filter(pred)
+                .select(F.col("doc_id").cast("string").alias("doc_id")),
+            )
+        files = keep + new_files
+        kept_rows = sum(s["rows"] for s in segments) + sum(f["rows"] for f in files)
+        return txn.commit(
+            "delete",
+            files,
+            segments,
+            schema=survivors.schema,
+            deleted_rows=m["total_rows"] - kept_rows,
+            # SQL-string predicates are recorded so the commit is auditable
+            # and re-checkable (validate_delete's read-back); Column
+            # predicates have no faithful serialization — recorded as None
+            delete_predicate=pred_sql,
+            deleted_docs=deleted_docs,
         )
-        import pyarrow.parquet as pq
-
-        n_deleted = sum(
-            pq.ParquetFile(p).metadata.num_rows
-            for p in glob.glob(os.path.join(deleted_dir, "part-*.parquet"))
-        )
-        manifest["deleted_docs"] = {
-            "loc": os.path.relpath(deleted_dir, root),
-            "n_docs": int(n_deleted),
-        }
-    _carry_layout(manifest, m)
-    try:
-        _commit_manifest(root, parent, sid, manifest, guard)
-    except ConcurrentCommitError:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        if spilled_loc is not None:
-            try:
-                os.unlink(os.path.join(_manifest_dir(root), spilled_loc))
-            except OSError:
-                pass
-        raise
-    return sid
 
 
 def _maybe_fold_filters(
@@ -1631,96 +1673,48 @@ def _snapshot_delete_mor(
     strategy. ``prune`` bounds the matched-set scan (caller-owned
     soundness claim, as in CoW) — the filter itself needs no pruning,
     it is scoped by construction. Zero matches commit nothing."""
-    import shutil
-    import uuid
-
-    from ovalspark.sources.commit_guard import resolve_guard  # noqa: F401  (parity with CoW)
-
-    parent = current_snapshot_id(root)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    m_raw = _load_manifest_raw(root, parent)
-    pred = F.expr(pred_sql)
-    sid = parent + 1
-    data_dir = os.path.join(root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-    deleted_dir = os.path.join(data_dir, "_deleted")
-
-    # matched rows = live rows (earlier filters applied) where pred IS
-    # TRUE — filter(pred) drops NULL-predicate rows, SQL DELETE semantics
-    live_matched = snapshot_read(spark, root, snapshot_id=parent, prune=prune).filter(pred)
-    schema_cols = {f["name"] for f in json.loads(m_raw["schema_json"])["fields"]}
-    manifest_extra: dict[str, Any] = {}
-    if "doc_id" in schema_cols:
-        (
-            live_matched.select(F.col("doc_id").cast("string").alias("doc_id"))
-            .write.mode("error")
-            .parquet(deleted_dir)
-        )
-        import pyarrow.parquet as pq
-
-        matched = sum(
-            pq.ParquetFile(p).metadata.num_rows
-            for p in glob.glob(os.path.join(deleted_dir, "part-*.parquet"))
-        )
-        manifest_extra["deleted_docs"] = {
-            "loc": os.path.relpath(deleted_dir, root),
-            "n_docs": int(matched),
-        }
-    else:
-        matched = live_matched.count()
-    if matched == 0:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        return parent
-
-    segments = list(m_raw.get("file_segments") or [])
-    inline = list(m_raw["files"])
-    spilled_loc: str | None = None
-    if len(inline) > _SEGMENT_SPILL_ENTRIES:
+    with _SnapshotTxn(root, guard, require_parent=True) as txn:
+        m_raw = txn.parent_raw
+        # matched rows = live rows (earlier filters applied) where pred IS
+        # TRUE — filter(pred) drops NULL-predicate rows, SQL DELETE semantics
+        live_matched = snapshot_read(
+            spark, root, snapshot_id=txn.parent, prune=prune
+        ).filter(F.expr(pred_sql))
+        deleted_docs = None
+        if "doc_id" in {f["name"] for f in json.loads(m_raw["schema_json"])["fields"]}:
+            deleted_docs = txn.sidecar(
+                "_deleted", live_matched.select(F.col("doc_id").cast("string").alias("doc_id"))
+            )
+            matched = deleted_docs["n_docs"]
+        else:
+            matched = live_matched.count()
+        if matched == 0:
+            return txn.parent
         # keep every scope O(refs + bounded paths): a wide inline list
         # (e.g. a single overwrite that wrote the whole table) would
         # otherwise be copied into this and every later manifest's scope
-        ref = _spill_segment(root, sid, inline)
-        spilled_loc = ref["loc"]
-        segments.append(ref)
-        inline = []
-    scope = {
-        "segments": [ref["loc"] for ref in segments],
-        "files": [f["path"] for f in inline],
-    }
-    row_filters = list(m_raw.get("row_filters") or [])
-    row_filters.append(
-        {"pred": pred_sql, "scope": scope, "sid": sid, "deleted_rows": int(matched)}
-    )
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": "delete",
-        "schema_ddl": m_raw["schema_ddl"],
-        "schema_json": m_raw["schema_json"],
-        "total_rows": m_raw["total_rows"] - int(matched),
-        # physical bytes are unchanged (nothing rewritten); logical bytes
-        # shrink only at materialization — recorded as-is on purpose
-        "total_bytes": m_raw["total_bytes"],
-        "deleted_rows": int(matched),
-        "delete_predicate": pred_sql,
-        "mor": True,
-        "row_filters": row_filters,
-        "files": inline,
-    }
-    if segments:
-        manifest["file_segments"] = segments
-    manifest.update(manifest_extra)
-    _carry_layout(manifest, m_raw)
-    try:
-        _commit_manifest(root, parent, sid, manifest, guard)
-    except ConcurrentCommitError:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        if spilled_loc is not None:
-            try:
-                os.unlink(os.path.join(_manifest_dir(root), spilled_loc))
-            except OSError:
-                pass
-        raise
+        segments, inline = txn.spill(m_raw.get("file_segments") or [], m_raw["files"], [])
+        scope = {
+            "segments": [ref["loc"] for ref in segments],
+            "files": [f["path"] for f in inline],
+        }
+        row_filters = list(m_raw.get("row_filters") or [])
+        row_filters.append(
+            {"pred": pred_sql, "scope": scope, "sid": txn.sid, "deleted_rows": int(matched)}
+        )
+        sid = txn.commit(
+            "delete",
+            inline,
+            segments,
+            # logical rows; total_bytes stays physical (nothing rewritten) —
+            # logical bytes shrink only at materialization, on purpose
+            total_rows=m_raw["total_rows"] - int(matched),
+            deleted_rows=int(matched),
+            delete_predicate=pred_sql,
+            mor=True,
+            row_filters=row_filters,
+            deleted_docs=deleted_docs,
+        )
     return _maybe_fold_filters(spark, root, sid, len(row_filters), guard, fold_threshold)
 
 
@@ -1887,34 +1881,36 @@ def snapshot_upsert(
     and filter). ``materialize_deletes`` folds the filter away like any
     MoR delete.
 
-    The staged frame must be UNIQUE on ``key`` — two staged rows with
-    one key would both survive, which is never what merge means; the
-    check raises before anything commits — including on the bootstrap
-    commit (no parent), which otherwise degrades to a plain overwrite.
-    Staged schema passes the same additive-evolution gate as an append.
-    Zero staged rows commit nothing.
+    The staged frame must be UNIQUE on ``key`` and carry no NULL key —
+    two staged rows with one key would both survive, which is never what
+    merge means, and a NULL key can never match (SQL equality, in the
+    merge and in the read path's keys anti-join), so a re-upserted NULL
+    would stack generations instead of replacing one. A merge key is
+    total (entity integrity). Both checks raise ``ValueError`` before
+    anything is staged — including on the bootstrap commit (no parent),
+    which otherwise degrades to a plain overwrite. Staged schema passes
+    the same additive-evolution gate as an append. Zero staged rows
+    commit nothing.
 
     Read-back obligation (oval's write-then-verify at merge
     granularity): after the commit, each staged key resolves to EXACTLY
     the staged generation — ``operators.incremental.validate_upsert``
     checks multiplicity per key, and the tail runs it on every upsert
     commit it follows."""
-    import shutil
-    import uuid
-
-    parent = current_snapshot_id(root)
     if key not in df.columns:
         raise ValueError(f"upsert key {key!r} not in staged columns {df.columns}")
     # one upstream execution for the write + the key scans below
     df = df.localCheckpoint()
-    # one aggregate; a NULL key counts as one distinct value
-    n_staged, n_keys = df.agg(
+    n_staged, n_keys, n_null = df.agg(
         F.count(F.lit(1)),
-        F.count_distinct(key) + F.max(F.col(key).isNull().cast("int")),
+        F.count_distinct(key),
+        F.count(F.when(F.col(key).isNull(), 1)),
     ).first()
-    if n_staged == 0:
-        return parent if parent is not None else snapshot_write(
-            df, root, mode="overwrite", guard=guard
+    if n_null:
+        raise ValueError(
+            f"upsert to {root}: {n_null} staged row(s) have a NULL {key!r} — "
+            f"a merge key must be non-NULL (a NULL key never matches, so its "
+            f"previous generation could never be replaced)"
         )
     # key-uniqueness is part of the merge CONTRACT, not a property of
     # the table state — enforce it on the bootstrap commit too, or a
@@ -1926,167 +1922,134 @@ def snapshot_upsert(
             f"{n_keys} distinct {key!r} values — merge requires key-unique "
             f"staging (deduplicate first)"
         )
-    if parent is None:
-        return snapshot_write(df, root, mode="overwrite", guard=guard)
-    m_raw = _load_manifest_raw(root, parent)
-    _check_append_schema(root, m_raw, df.schema)
+    with _SnapshotTxn(root, guard) as txn:
+        if txn.parent is None:
+            return snapshot_write(df, root, mode="overwrite", guard=guard)
+        if n_staged == 0:
+            return txn.parent
+        m_raw = txn.parent_raw
+        _check_append_schema(root, m_raw, df.schema)
+        new_files = txn.write(df)
+        if m_raw.get("constraints"):
+            # merge enforcement covers the STAGED rows (not_null/range/check).
+            # A `unique` constraint whose key columns CONTAIN the upsert key
+            # needs no cross-check: the staged frame is key-unique (above) —
+            # so any tuple containing the key is staged-unique — and the
+            # merge retracts every matched live key, so a colliding parent
+            # row would share the upsert key and is retracted. A unique
+            # constraint on OTHER columns (e.g. unique email, upsert keyed
+            # on doc_id) gets the full check below: staged-internal dups +
+            # staged keys vs the SURVIVING parent rows (matched keys are
+            # retracted by this commit, so they are excluded).
+            from ovalspark.sources.constraints import (
+                ConstraintViolationError,
+                _all_notnull,
+                _enforce_staged,
+                _key_cols,
+                _unique_violations,
+            )
 
-    sid = parent + 1
-    data_dir = os.path.join(root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-    df.write.mode("error").parquet(data_dir)
-    new_files = _footer_stats(glob.glob(os.path.join(data_dir, "part-*.parquet")), root)
-    if m_raw.get("constraints"):
-        # merge enforcement covers the STAGED rows (not_null/range/check).
-        # A `unique` constraint whose key columns CONTAIN the upsert key
-        # needs no cross-check: the staged frame is key-unique (above) —
-        # so any tuple containing the key is staged-unique — and the
-        # merge retracts every matched live key, so a colliding parent
-        # row would share the upsert key and is retracted. A unique
-        # constraint on OTHER columns (e.g. unique email, upsert keyed
-        # on doc_id) gets the full check below: staged-internal dups +
-        # staged keys vs the SURVIVING parent rows (matched keys are
-        # retracted by this commit, so they are excluded).
-        from ovalspark.sources.constraints import (
-            ConstraintViolationError,
-            _all_notnull,
-            _enforce_staged,
-            _key_cols,
-            _unique_violations,
+            _enforce_staged(
+                spark, root, m_raw, new_files, txn.data_dir, "append",
+                kinds=("not_null", "range", "check", "ref", "drift"),
+            )
+            other_uniques = [
+                c
+                for c in m_raw["constraints"]
+                if c.get("enforce", True)
+                and c["kind"] == "unique"
+                and key not in _key_cols(c)
+            ]
+            for c in other_uniques:
+                kcols = _key_cols(c)
+                missing = [k for k in kcols if k not in df.columns]
+                if missing:
+                    raise ConstraintViolationError(
+                        f"upsert drops constrained column(s) {missing!r} "
+                        f"({c['name']}) — drop_constraints first",
+                        [{"constraint": c["name"], "violated_rows": 0}],
+                    )
+                dups = _unique_violations(df, kcols)
+                hits = 0
+                if not dups:
+                    # bounds-prune the parent read to the staged key range —
+                    # same shape as the append path's vs-parent probe: a
+                    # parent file whose recorded bounds miss the staged range
+                    # on any key column cannot hold a collision (pruning is a
+                    # superset guarantee; the join is the exact predicate)
+                    b = df.agg(
+                        *[
+                            e
+                            for j, x in enumerate(kcols)
+                            for e in (F.min(x).alias(f"_l{j}"), F.max(x).alias(f"_h{j}"))
+                        ]
+                    ).collect()[0]
+                    conds = [(x, b[f"_l{j}"], b[f"_h{j}"]) for j, x in enumerate(kcols)]
+                    prune = conds if all(lo is not None for _, lo, _hi in conds) else None
+                    surviving = (
+                        snapshot_read(spark, root, snapshot_id=txn.parent, prune=prune)
+                        .join(df.select(key), key, "left_anti")
+                        .select(*kcols)
+                    )
+                    staged_keys = df.select(*kcols).where(_all_notnull(kcols)).distinct()
+                    hits = surviving.join(staged_keys, on=kcols, how="inner").count()
+                if dups or hits:
+                    raise ConstraintViolationError(
+                        f"staged data violates enforced constraint(s): "
+                        f"{c['name']}={dups or hits} — nothing was committed",
+                        [{"constraint": c["name"], "violated_rows": int(dups or hits)}],
+                    )
+        txn.inherit_indexes(spark, new_files)
+
+        # matched = LIVE old-generation rows being replaced (earlier MoR
+        # filters already applied via snapshot_read); per-key counts make
+        # the replaced-row total exact even for non-unique old data
+        keys_dir = os.path.join(txn.data_dir, "_upsert_keys")
+        matched = (
+            snapshot_read(spark, root, snapshot_id=txn.parent)
+            .join(df.select(key), key, "left_semi")
+            .groupBy(key)
+            .agg(F.count("*").alias("n_replaced"))
+        )
+        matched.write.mode("error").parquet(keys_dir)
+        matched_rows, n_matched_keys = (  # typed read-back: no inference job
+            spark.read.schema(matched.schema).parquet(keys_dir)
+            .agg(F.coalesce(F.sum("n_replaced"), F.lit(0)), F.count(F.lit(1))).first()
         )
 
-        _enforce_staged(
-            spark, root, m_raw, new_files, data_dir, "append",
-            kinds=("not_null", "range", "check", "ref", "drift"),
-        )
-        other_uniques = [
-            c
-            for c in m_raw["constraints"]
-            if c.get("enforce", True)
-            and c["kind"] == "unique"
-            and key not in _key_cols(c)
-        ]
-        for c in other_uniques:
-            kcols = _key_cols(c)
-            missing = [k for k in kcols if k not in df.columns]
-            if missing:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise ConstraintViolationError(
-                    f"upsert drops constrained column(s) {missing!r} "
-                    f"({c['name']}) — drop_constraints first",
-                    [{"constraint": c["name"], "violated_rows": 0}],
-                )
-            dups = _unique_violations(df, kcols)
-            hits = 0
-            if not dups:
-                # bounds-prune the parent read to the staged key range —
-                # same shape as the append path's vs-parent probe: a
-                # parent file whose recorded bounds miss the staged range
-                # on any key column cannot hold a collision (pruning is a
-                # superset guarantee; the join is the exact predicate)
-                b = df.agg(
-                    *[
-                        e
-                        for j, x in enumerate(kcols)
-                        for e in (F.min(x).alias(f"_l{j}"), F.max(x).alias(f"_h{j}"))
-                    ]
-                ).collect()[0]
-                conds = [(x, b[f"_l{j}"], b[f"_h{j}"]) for j, x in enumerate(kcols)]
-                prune = conds if all(lo is not None for _, lo, _hi in conds) else None
-                surviving = (
-                    snapshot_read(spark, root, snapshot_id=parent, prune=prune)
-                    .join(df.select(key), key, "left_anti")
-                    .select(*kcols)
-                )
-                staged_keys = df.select(*kcols).where(_all_notnull(kcols)).distinct()
-                hits = surviving.join(staged_keys, on=kcols, how="inner").count()
-            if dups or hits:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise ConstraintViolationError(
-                    f"staged data violates enforced constraint(s): "
-                    f"{c['name']}={dups or hits} — nothing was committed",
-                    [{"constraint": c["name"], "violated_rows": int(dups or hits)}],
-                )
-    inherited = _inherited_sketch_cols(root, m_raw)
-    if inherited:
-        _attach_sketches(spark, root, new_files, inherited)
-    inherited_b = _inherited_bloom_cols(root, m_raw)
-    if inherited_b:
-        _attach_blooms(spark, root, new_files, inherited_b)
-
-    # matched = LIVE old-generation rows being replaced (earlier MoR
-    # filters already applied via snapshot_read); per-key counts make
-    # the replaced-row total exact even for non-unique old data
-    keys_dir = os.path.join(data_dir, "_upsert_keys")
-    matched = (
-        snapshot_read(spark, root, snapshot_id=parent)
-        .join(df.select(key), key, "left_semi")
-        .groupBy(key)
-        .agg(F.count("*").alias("n_replaced"))
-    )
-    matched.write.mode("error").parquet(keys_dir)
-    matched_rows, n_matched_keys = (  # typed read-back: no inference job
-        spark.read.schema(matched.schema).parquet(keys_dir)
-        .agg(F.coalesce(F.sum("n_replaced"), F.lit(0)), F.count(F.lit(1))).first()
-    )
-
-    segments = list(m_raw.get("file_segments") or [])
-    inline = list(m_raw["files"])
-    spilled_loc: str | None = None
-    if len(inline) + len(new_files) > _SEGMENT_SPILL_ENTRIES and inline:
-        ref = _spill_segment(root, sid, inline)
-        spilled_loc = ref["loc"]
-        segments.append(ref)
-        inline = []
-    scope = {
-        "segments": [ref["loc"] for ref in segments],
-        "files": [f["path"] for f in inline],
-    }
-    row_filters = list(m_raw.get("row_filters") or [])
-    if matched_rows:
-        row_filters.append(
-            {
-                "kind": "keys",
-                "key": key,
+        segments, inline = txn.spill(m_raw.get("file_segments") or [], m_raw["files"], new_files)
+        row_filters = list(m_raw.get("row_filters") or [])
+        if matched_rows:
+            row_filters.append(
+                {
+                    "kind": "keys",
+                    "key": key,
+                    "loc": os.path.relpath(keys_dir, root),
+                    "n_keys": int(n_matched_keys),
+                    "scope": {
+                        "segments": [ref["loc"] for ref in segments],
+                        "files": [f["path"] for f in inline],
+                    },
+                    "sid": txn.sid,
+                    "deleted_rows": int(matched_rows),
+                }
+            )
+        sid = txn.commit(
+            "upsert",
+            inline + new_files,
+            segments,
+            # the staged schema passed the additive gate: same-or-wider, and
+            # like an append the commit records the WIDER shape
+            schema=df.schema,
+            total_rows=m_raw["total_rows"] - int(matched_rows) + n_staged,
+            upsert_key=key,
+            upsert_keys={
                 "loc": os.path.relpath(keys_dir, root),
-                "n_keys": int(n_matched_keys),
-                "scope": scope,
-                "sid": sid,
-                "deleted_rows": int(matched_rows),
-            }
+                "n_staged": int(n_staged),
+                "n_replaced": int(matched_rows),
+            },
+            row_filters=row_filters or None,
         )
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": "upsert",
-        # the staged schema passed the additive gate: same-or-wider, and
-        # like an append the commit records the WIDER shape
-        "schema_ddl": df.schema.simpleString(),
-        "schema_json": df.schema.json(),
-        "total_rows": m_raw["total_rows"] - int(matched_rows) + n_staged,
-        "total_bytes": m_raw["total_bytes"] + sum(f["bytes"] for f in new_files),
-        "upsert_key": key,
-        "upsert_keys": {
-            "loc": os.path.relpath(keys_dir, root),
-            "n_staged": int(n_staged),
-            "n_replaced": int(matched_rows),
-        },
-        "files": inline + new_files,
-    }
-    if row_filters:
-        manifest["row_filters"] = row_filters
-    if segments:
-        manifest["file_segments"] = segments
-    _carry_layout(manifest, m_raw)
-    try:
-        _commit_manifest(root, parent, sid, manifest, guard)
-    except ConcurrentCommitError:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        if spilled_loc is not None:
-            try:
-                os.unlink(os.path.join(_manifest_dir(root), spilled_loc))
-            except OSError:
-                pass
-        raise
     return _maybe_fold_filters(spark, root, sid, len(row_filters), guard, fold_threshold)
 
 
@@ -2103,106 +2066,45 @@ def materialize_deletes(
     merging and copy-on-write deletes are available again. Returns the
     new snapshot id (or the parent when no filters are pending). Time
     travel to pre-materialization ids still applies their filters."""
-    import shutil
-    import uuid
-
-    parent = current_snapshot_id(root)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    m_raw = _load_manifest_raw(root, parent)
-    filters = m_raw.get("row_filters")
-    if not filters:
-        return parent
-    groups = _filter_groups(root, m_raw, None)
-    keep_paths = set(groups.pop((), []))
-    # untouched segments (every entry unfiltered) carry by reference;
-    # everything else (filtered entries + inline keeps) lands inline
-    kept_segs: list[dict[str, Any]] = []
-    keep_inline: list[dict[str, Any]] = []
-    for ref in m_raw.get("file_segments") or []:
-        entries = _read_segment(root, ref["loc"])
-        if all(_abs_path(root, e["path"]) in keep_paths for e in entries):
-            kept_segs.append(ref)
-        else:
-            keep_inline.extend(
-                e for e in entries if _abs_path(root, e["path"]) in keep_paths
-            )
-    keep_inline.extend(f for f in m_raw["files"] if _abs_path(root, f["path"]) in keep_paths)
-
-    sid = parent + 1
-    data_dir = os.path.join(root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-    bytes_by_path = {
-        _abs_path(root, e["path"]): e["bytes"]
-        for e, _ in _expand_with_provenance(root, m_raw)
-    }
-    new_files: list[dict[str, Any]] = []
-    if groups:
-        # pre-delete sizes: an upper bound, only used to pick a file count
-        rewrite_bytes = sum(bytes_by_path[p] for paths in groups.values() for p in paths)
-        n_files = max(1, -(-rewrite_bytes // (target_file_mb * 1024 * 1024)))
-        rewritten = _read_strata(spark, root, filters, groups, _committed_schema(m_raw))
-        rewritten.repartition(n_files).write.mode("error").parquet(data_dir)
-        new_files = [
-            fe
-            for fe in _footer_stats(glob.glob(os.path.join(data_dir, "part-*.parquet")), root)
-            if fe["rows"] > 0
-        ]
-        inherited = _inherited_sketch_cols(root, m_raw)
-        if inherited:
-            _attach_sketches(spark, root, new_files, inherited)
-        inherited_b = _inherited_bloom_cols(root, m_raw)
-        if inherited_b:
-            _attach_blooms(spark, root, new_files, inherited_b)
-    inline = keep_inline + new_files
-    spilled_loc: str | None = None
-    if keep_inline and len(inline) > _SEGMENT_SPILL_ENTRIES:
-        ref = _spill_segment(root, sid, keep_inline)
-        spilled_loc = ref["loc"]
-        kept_segs = kept_segs + [ref]
-        inline = list(new_files)
-    total_rows = sum(s["rows"] for s in kept_segs) + sum(f["rows"] for f in inline)
-    total_bytes = sum(s["bytes"] for s in kept_segs) + sum(f["bytes"] for f in inline)
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": "replace",
-        "schema_ddl": m_raw["schema_ddl"],
-        "schema_json": m_raw["schema_json"],
-        "total_rows": total_rows,
-        "total_bytes": total_bytes,
-        "materialized_filters": len(filters),
-        "files": inline,
-    }
-    if kept_segs:
-        manifest["file_segments"] = kept_segs
-    _carry_layout(manifest, m_raw)
-    try:
-        _commit_manifest(root, parent, sid, manifest, guard)
-    except ConcurrentCommitError:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        if spilled_loc is not None:
-            try:
-                os.unlink(os.path.join(_manifest_dir(root), spilled_loc))
-            except OSError:
-                pass
-        raise
-    return sid
+    with _SnapshotTxn(root, guard, require_parent=True) as txn:
+        m_raw = txn.parent_raw
+        filters = m_raw.get("row_filters")
+        if not filters:
+            return txn.parent
+        groups = _filter_groups(root, m_raw, None)
+        keep_paths = set(groups.pop((), []))
+        # untouched segments (every entry unfiltered) carry by reference;
+        # everything else (filtered entries + inline keeps) lands inline
+        kept_segs: list[dict[str, Any]] = []
+        keep_inline: list[dict[str, Any]] = []
+        for ref in m_raw.get("file_segments") or []:
+            entries = _read_segment(root, ref["loc"])
+            if all(_abs_path(root, e["path"]) in keep_paths for e in entries):
+                kept_segs.append(ref)
+            else:
+                keep_inline.extend(
+                    e for e in entries if _abs_path(root, e["path"]) in keep_paths
+                )
+        keep_inline.extend(f for f in m_raw["files"] if _abs_path(root, f["path"]) in keep_paths)
+        new_files: list[dict[str, Any]] = []
+        if groups:
+            bytes_by_path = {
+                _abs_path(root, e["path"]): e["bytes"]
+                for e, _ in _expand_with_provenance(root, m_raw)
+            }
+            # pre-delete sizes: an upper bound, only used to pick a file count
+            rewrite_bytes = sum(bytes_by_path[p] for paths in groups.values() for p in paths)
+            n_files = max(1, -(-rewrite_bytes // (target_file_mb * 1024 * 1024)))
+            rewritten = _read_strata(spark, root, filters, groups, _committed_schema(m_raw))
+            new_files = txn.write(rewritten.repartition(n_files), drop_empty=True)
+            txn.inherit_indexes(spark, new_files)
+        segments, keep = txn.spill(kept_segs, keep_inline, new_files)
+        return txn.commit(
+            "replace", keep + new_files, segments, materialized_filters=len(filters)
+        )
 
 
 _SKETCH_LGK = 11  # HLL lgConfigK: ~1 KB binary per sketch, ±~2.3% NDV error
-
-
-def _inherited_sketch_cols(root: str, m_raw: dict[str, Any]) -> list[str]:
-    """Sketch columns present on ANY of a manifest's file entries —
-    maintenance rewrites (sort_rewrite / compact / materialize / upsert)
-    recompute these for the files they emit, so engine-owned writes never
-    silently degrade the table's sketch coverage (user appends choose
-    explicitly via ``sketch_cols``; partial coverage is reported, not
-    extrapolated)."""
-    cols: set[str] = set()
-    for fe, _ in _expand_with_provenance(root, m_raw):
-        cols.update((fe.get("hll") or {}).keys())
-    return sorted(cols)
 
 
 def _attach_sketches(
@@ -2341,16 +2243,6 @@ def _attach_blooms(
         meta = by_file.get(os.path.basename(fe["path"]))
         if meta:
             fe["bloom"] = meta
-
-
-def _inherited_bloom_cols(root: str, m_raw: dict[str, Any]) -> list[str]:
-    """Bloom columns present on ANY of a manifest's file entries — same
-    inheritance contract as sketches: engine-owned rewrites never
-    silently degrade the table's probe coverage."""
-    cols: set[str] = set()
-    for fe, _ in _expand_with_provenance(root, m_raw):
-        cols.update((fe.get("bloom") or {}).keys())
-    return sorted(cols)
 
 
 def _probe_hashes(spark: SparkSession, value, dtype: str) -> tuple[int, int]:
@@ -2624,9 +2516,6 @@ def sort_rewrite(
     are normalized to ``min(16, 63 // k)`` bits between their p0.1/p99.9
     quantile bounds (outlier-robust; one column-pruned aggregate pass);
     date/timestamp columns z-order through their epoch form."""
-    import shutil
-    import uuid
-
     if isinstance(sort_by, str):
         sort_by = [sort_by]
     if (sort_by is None) == (zorder is None):
@@ -2635,129 +2524,102 @@ def sort_rewrite(
         raise ValueError(f"zorder takes 2-4 columns, got {len(zorder)}")
     if target_file_mb < 1:
         raise ValueError(f"target_file_mb must be >= 1, got {target_file_mb}")
-    parent = current_snapshot_id(root)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    m_raw = _load_manifest_raw(root, parent)
-    cluster_cols = list(sort_by or zorder)
-    missing = [
-        c for c in cluster_cols
-        if c not in {f["name"] for f in json.loads(m_raw["schema_json"])["fields"]}
-    ]
-    if missing:
-        raise ValueError(f"cluster column(s) {missing} not in table schema")
-    n_files = max(1, -(-m_raw["total_bytes"] // (target_file_mb * 1024 * 1024)))
-    sid = parent + 1
-    data_dir = os.path.join(root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-    df = snapshot_read(spark, root, snapshot_id=parent)
-    if zorder is not None:
-        for c in zorder:
-            if not df.schema[c].dataType.simpleString() in (
-                "tinyint", "smallint", "int", "bigint", "float", "double", "date",
-                "timestamp", "decimal",
-            ) and not df.schema[c].dataType.simpleString().startswith("decimal"):
-                raise ValueError(
-                    f"zorder column {c!r} is {df.schema[c].dataType.simpleString()} "
-                    f"— z-ordering needs ORDERED NUMERIC columns (hashing a "
-                    f"string would destroy the locality the curve exists for)"
-                )
-        # bits per dimension: bits*k must stay BELOW the long's sign bit
-        # (bit 63) — with 4 columns at 16 bits, dimension 3 would shift
-        # into position 63 and rows past the midpoint would sort negative,
-        # splitting the curve in half. 4 columns therefore get 15 bits.
-        bits = min(16, 63 // len(zorder))
-        max_code = (1 << bits) - 1
-        # temporal columns normalize through an explicit numeric form
-        # (Spark cannot cast date to double, and python float() on the
-        # collected datetime extremes raises)
-        num: dict[str, F.Column] = {}
-        for c in zorder:
-            t = df.schema[c].dataType.simpleString()
-            if t == "date":
-                num[c] = F.datediff(F.col(c), F.to_date(F.lit("1970-01-01"))).cast("double")
-            else:  # numerics and timestamp (casts to fractional epoch seconds)
-                num[c] = F.col(c).cast("double")
-        # Scale bounds from ONE aggregate pass over the cluster columns
-        # only (column-pruned, far below the rewrite's own scan). Bounds
-        # are the p0.1/p99.9 quantiles, not global min/max: one extreme
-        # outlier row must not collapse the curve's useful resolution for
-        # the whole column — values past the bounds clamp to the first /
-        # last code, costing locality only for the outliers themselves.
-        # Degenerate inner span (heavily-concentrated column) falls back
-        # to true min/max.
-        aggs = []
-        for c in zorder:
-            aggs += [
-                F.min(num[c]).alias(f"_mn_{c}"),
-                F.max(num[c]).alias(f"_mx_{c}"),
-                F.percentile_approx(num[c], [0.001, 0.999], 10000).alias(f"_q_{c}"),
-            ]
-        mm = df.agg(*aggs).collect()[0]
-        scaled = []
-        for c in zorder:
-            mn, mx = mm[f"_mn_{c}"], mm[f"_mx_{c}"]
-            q = mm[f"_q_{c}"] or [None, None]
-            lo, hi = q[0], q[1]
-            if lo is None or hi is None or not float(hi) - float(lo) > 0:
-                lo, hi = mn, mx
-            col = num[c]
-            span = float(hi) - float(lo) if hi is not None and lo is not None else 0.0
-            if span <= 0:
-                scaled.append(F.lit(0).cast("long"))  # constant/NULL column
-            else:
-                scaled.append(
-                    F.least(
-                        F.lit(max_code),
-                        F.greatest(
-                            F.lit(0),
-                            F.floor((col - F.lit(float(lo))) / F.lit(span) * max_code),
-                        ),
-                    ).cast("long")
-                )
-        # NULLs sort first: coalesce scaled NULL to 0 keeps them clustered
-        scaled = [F.coalesce(s, F.lit(0).cast("long")) for s in scaled]
-        df = (
-            df.withColumn("_zv", _zvalue_expr(scaled, bits))
-            .repartitionByRange(n_files, "_zv")
-            .sortWithinPartitions("_zv")
-            .drop("_zv")
+    with _SnapshotTxn(root, guard, require_parent=True) as txn:
+        m_raw = txn.parent_raw
+        cluster_cols = list(sort_by or zorder)
+        missing = [
+            c for c in cluster_cols
+            if c not in {f["name"] for f in json.loads(m_raw["schema_json"])["fields"]}
+        ]
+        if missing:
+            raise ValueError(f"cluster column(s) {missing} not in table schema")
+        n_files = max(1, -(-m_raw["total_bytes"] // (target_file_mb * 1024 * 1024)))
+        df = snapshot_read(spark, root, snapshot_id=txn.parent)
+        if zorder is not None:
+            for c in zorder:
+                if not df.schema[c].dataType.simpleString() in (
+                    "tinyint", "smallint", "int", "bigint", "float", "double", "date",
+                    "timestamp", "decimal",
+                ) and not df.schema[c].dataType.simpleString().startswith("decimal"):
+                    raise ValueError(
+                        f"zorder column {c!r} is {df.schema[c].dataType.simpleString()} "
+                        f"— z-ordering needs ORDERED NUMERIC columns (hashing a "
+                        f"string would destroy the locality the curve exists for)"
+                    )
+            # bits per dimension: bits*k must stay BELOW the long's sign bit
+            # (bit 63) — with 4 columns at 16 bits, dimension 3 would shift
+            # into position 63 and rows past the midpoint would sort negative,
+            # splitting the curve in half. 4 columns therefore get 15 bits.
+            bits = min(16, 63 // len(zorder))
+            max_code = (1 << bits) - 1
+            # temporal columns normalize through an explicit numeric form
+            # (Spark cannot cast date to double, and python float() on the
+            # collected datetime extremes raises)
+            num: dict[str, F.Column] = {}
+            for c in zorder:
+                t = df.schema[c].dataType.simpleString()
+                if t == "date":
+                    num[c] = F.datediff(F.col(c), F.to_date(F.lit("1970-01-01"))).cast("double")
+                else:  # numerics and timestamp (casts to fractional epoch seconds)
+                    num[c] = F.col(c).cast("double")
+            # Scale bounds from ONE aggregate pass over the cluster columns
+            # only (column-pruned, far below the rewrite's own scan). Bounds
+            # are the p0.1/p99.9 quantiles, not global min/max: one extreme
+            # outlier row must not collapse the curve's useful resolution for
+            # the whole column — values past the bounds clamp to the first /
+            # last code, costing locality only for the outliers themselves.
+            # Degenerate inner span (heavily-concentrated column) falls back
+            # to true min/max.
+            aggs = []
+            for c in zorder:
+                aggs += [
+                    F.min(num[c]).alias(f"_mn_{c}"),
+                    F.max(num[c]).alias(f"_mx_{c}"),
+                    F.percentile_approx(num[c], [0.001, 0.999], 10000).alias(f"_q_{c}"),
+                ]
+            mm = df.agg(*aggs).collect()[0]
+            scaled = []
+            for c in zorder:
+                mn, mx = mm[f"_mn_{c}"], mm[f"_mx_{c}"]
+                q = mm[f"_q_{c}"] or [None, None]
+                lo, hi = q[0], q[1]
+                if lo is None or hi is None or not float(hi) - float(lo) > 0:
+                    lo, hi = mn, mx
+                col = num[c]
+                span = float(hi) - float(lo) if hi is not None and lo is not None else 0.0
+                if span <= 0:
+                    scaled.append(F.lit(0).cast("long"))  # constant/NULL column
+                else:
+                    scaled.append(
+                        F.least(
+                            F.lit(max_code),
+                            F.greatest(
+                                F.lit(0),
+                                F.floor((col - F.lit(float(lo))) / F.lit(span) * max_code),
+                            ),
+                        ).cast("long")
+                    )
+            # NULLs sort first: coalesce scaled NULL to 0 keeps them clustered
+            scaled = [F.coalesce(s, F.lit(0).cast("long")) for s in scaled]
+            df = (
+                df.withColumn("_zv", _zvalue_expr(scaled, bits))
+                .repartitionByRange(n_files, "_zv")
+                .sortWithinPartitions("_zv")
+                .drop("_zv")
+            )
+        else:
+            df = df.repartitionByRange(n_files, *cluster_cols).sortWithinPartitions(
+                *cluster_cols
+            )
+        new_files = txn.write(df)
+        txn.inherit_indexes(spark, new_files)
+        return txn.commit(
+            "replace",
+            new_files,
+            sort_by=None if sort_by is None else list(sort_by),
+            zorder=None if zorder is None else list(zorder),
+            materialized_filters=len(m_raw["row_filters"]) if m_raw.get("row_filters") else None,
         )
-    else:
-        df = df.repartitionByRange(n_files, *cluster_cols).sortWithinPartitions(
-            *cluster_cols
-        )
-    df.write.mode("error").parquet(data_dir)
-    new_files = _footer_stats(glob.glob(os.path.join(data_dir, "part-*.parquet")), root)
-    inherited = _inherited_sketch_cols(root, m_raw)
-    if inherited:
-        _attach_sketches(spark, root, new_files, inherited)
-    inherited_b = _inherited_bloom_cols(root, m_raw)
-    if inherited_b:
-        _attach_blooms(spark, root, new_files, inherited_b)
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": "replace",
-        "schema_ddl": m_raw["schema_ddl"],
-        "schema_json": m_raw["schema_json"],
-        "total_rows": sum(f["rows"] for f in new_files),
-        "total_bytes": sum(f["bytes"] for f in new_files),
-        "files": new_files,
-    }
-    if sort_by is not None:
-        manifest["sort_by"] = list(sort_by)
-    else:
-        manifest["zorder"] = list(zorder)
-    if m_raw.get("constraints"):
-        manifest["constraints"] = m_raw["constraints"]
-    if m_raw.get("row_filters"):
-        manifest["materialized_filters"] = len(m_raw["row_filters"])
-    try:
-        _commit_manifest(root, parent, sid, manifest, guard)
-    except ConcurrentCommitError:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise
-    return sid
 
 
 def _layout_dirty_entries(
@@ -2830,95 +2692,48 @@ def cluster_incremental(
     budget. ``sort_by`` defaults to the layout recorded by the last full
     rewrite. Returns the new snapshot id, or CURRENT when the layout is
     already settled."""
-    import shutil
-    import uuid
-
     if isinstance(sort_by, str):
         sort_by = [sort_by]
     if target_file_mb < 1:
         raise ValueError(f"target_file_mb must be >= 1, got {target_file_mb}")
-    parent = current_snapshot_id(root)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    m_raw = _load_manifest_raw(root, parent)
-    if m_raw.get("row_filters"):
-        # rewriting a filter-scoped file would re-emit its MoR-hidden
-        # rows into files outside the filter's scope (resurrection)
-        raise ValueError(
-            f"table at {root} has merge-on-read delete filter(s) pending — "
-            f"run materialize_deletes first, then cluster"
-        )
-    if sort_by is None:
-        sort_by = m_raw.get("sort_by")
-    if not sort_by:
-        if m_raw.get("zorder"):
+    with _SnapshotTxn(root, guard, require_parent=True) as txn:
+        m_raw = txn.parent_raw
+        if m_raw.get("row_filters"):
+            # rewriting a filter-scoped file would re-emit its MoR-hidden
+            # rows into files outside the filter's scope (resurrection)
             raise ValueError(
-                "z-ordered layout has no single-key run structure to merge "
-                "incrementally — run a full sort_rewrite(zorder=...) instead"
+                f"table at {root} has merge-on-read delete filter(s) pending — "
+                f"run materialize_deletes first, then cluster"
             )
-        raise ValueError(
-            f"table at {root} records no sort_by layout — pass sort_by "
-            f"explicitly or run a full sort_rewrite first"
+        if sort_by is None:
+            sort_by = m_raw.get("sort_by")
+        if not sort_by:
+            if m_raw.get("zorder"):
+                raise ValueError(
+                    "z-ordered layout has no single-key run structure to merge "
+                    "incrementally — run a full sort_rewrite(zorder=...) instead"
+                )
+            raise ValueError(
+                f"table at {root} records no sort_by layout — pass sort_by "
+                f"explicitly or run a full sort_rewrite first"
+            )
+        sort_by = list(sort_by)
+        dirty = _layout_dirty_entries(root, m_raw, sort_by[0])
+        if dirty is None:
+            return txn.parent
+        affected = {os.path.basename(fe["path"]) for fe in dirty}
+        kept_segs, keep = _partition_metadata(root, m_raw, affected)
+        dirty_bytes = sum(fe["bytes"] for fe in dirty)
+        n_files = max(1, -(-dirty_bytes // (target_file_mb * 1024 * 1024)))
+        df = spark.read.schema(_committed_schema(m_raw)).parquet(
+            *[_abs_path(root, fe["path"]) for fe in dirty]
         )
-    sort_by = list(sort_by)
-    dirty = _layout_dirty_entries(root, m_raw, sort_by[0])
-    if dirty is None:
-        return parent
-    affected = {os.path.basename(fe["path"]) for fe in dirty}
-    kept_segs, keep = _partition_metadata(root, m_raw, affected)
-    sid = parent + 1
-    data_dir = os.path.join(root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-    dirty_bytes = sum(fe["bytes"] for fe in dirty)
-    n_files = max(1, -(-dirty_bytes // (target_file_mb * 1024 * 1024)))
-    df = spark.read.schema(_committed_schema(m_raw)).parquet(
-        *[_abs_path(root, fe["path"]) for fe in dirty]
-    )
-    (
-        df.repartitionByRange(n_files, *sort_by)
-        .sortWithinPartitions(*sort_by)
-        .write.mode("error")
-        .parquet(data_dir)
-    )
-    new_files = _footer_stats(glob.glob(os.path.join(data_dir, "part-*.parquet")), root)
-    inherited = _inherited_sketch_cols(root, m_raw)
-    if inherited:
-        _attach_sketches(spark, root, new_files, inherited)
-    inherited_b = _inherited_bloom_cols(root, m_raw)
-    if inherited_b:
-        _attach_blooms(spark, root, new_files, inherited_b)
-    inline = keep + new_files
-    spilled_loc: str | None = None
-    if keep and len(inline) > _SEGMENT_SPILL_ENTRIES:
-        ref = _spill_segment(root, sid, keep)
-        spilled_loc = ref["loc"]
-        kept_segs = kept_segs + [ref]
-        inline = list(new_files)
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": "replace",
-        "schema_ddl": m_raw["schema_ddl"],
-        "schema_json": m_raw["schema_json"],
-        "total_rows": sum(s["rows"] for s in kept_segs) + sum(f["rows"] for f in inline),
-        "total_bytes": sum(s["bytes"] for s in kept_segs) + sum(f["bytes"] for f in inline),
-        "files": inline,
-        "sort_by": sort_by,
-    }
-    if m_raw.get("constraints"):
-        manifest["constraints"] = m_raw["constraints"]
-    if kept_segs:
-        manifest["file_segments"] = kept_segs
-    try:
-        _commit_manifest(root, parent, sid, manifest, guard)
-    except ConcurrentCommitError:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        if spilled_loc is not None:
-            try:
-                os.unlink(os.path.join(_manifest_dir(root), spilled_loc))
-            except OSError:
-                pass
-        raise
-    return sid
+        new_files = txn.write(
+            df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(*sort_by)
+        )
+        txn.inherit_indexes(spark, new_files)
+        segments, keep = txn.spill(kept_segs, keep, new_files)
+        return txn.commit("replace", keep + new_files, segments, sort_by=sort_by)
 
 
 def snapshot_compact(
@@ -2937,86 +2752,40 @@ def snapshot_compact(
     new id, or CURRENT unchanged when fewer than two files are below
     target (nothing to gain). Operation is recorded as ``replace`` —
     like ``delete``, it never joins an append-only batched span."""
-    import shutil
-    import uuid
-
     if target_file_mb < 1:
         raise ValueError(f"target_file_mb must be >= 1, got {target_file_mb}")
-    parent = current_snapshot_id(root)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    m = load_manifest(root, parent)
-    if m.get("row_filters"):
-        # the bin-pack rewrite would re-emit MoR-deleted rows into files
-        # outside every filter's scope (resurrection); materialization IS
-        # the compaction of those files
-        raise ValueError(
-            f"table at {root} has merge-on-read delete filter(s) pending — "
-            f"run materialize_deletes first, then compact"
+    with _SnapshotTxn(root, guard, require_parent=True) as txn:
+        m = _expand_manifest(root, txn.parent_raw)
+        if m.get("row_filters"):
+            # the bin-pack rewrite would re-emit MoR-deleted rows into files
+            # outside every filter's scope (resurrection); materialization IS
+            # the compaction of those files
+            raise ValueError(
+                f"table at {root} has merge-on-read delete filter(s) pending — "
+                f"run materialize_deletes first, then compact"
+            )
+        threshold = target_file_mb * 1024 * 1024
+        small = [f for f in m["files"] if f["bytes"] < threshold]
+        if len(small) < 2:
+            return txn.parent
+        # segments made only of at-target files carry by reference — a
+        # compaction of fresh tail debt leaves the table's settled metadata
+        # history untouched, like its settled data files
+        kept_segs, keep = _partition_metadata(
+            root, txn.parent_raw, {os.path.basename(f["path"]) for f in small}
         )
-    threshold = target_file_mb * 1024 * 1024
-    small = [f for f in m["files"] if f["bytes"] < threshold]
-    if len(small) < 2:
-        return parent
-    # segments made only of at-target files carry by reference — a
-    # compaction of fresh tail debt leaves the table's settled metadata
-    # history untouched, like its settled data files
-    kept_segs, keep = _partition_metadata(
-        root,
-        _load_manifest_raw(root, parent),
-        {os.path.basename(f["path"]) for f in small},
-    )
-    sid = parent + 1
-    data_dir = os.path.join(root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-    n_files = max(1, -(-sum(f["bytes"] for f in small) // threshold))
-    df = spark.read.schema(_committed_schema(m)).parquet(
-        *[_abs_path(root, f["path"]) for f in small]
-    )
-    df.repartition(n_files).write.mode("error").parquet(data_dir)
-    new_files = _footer_stats(glob.glob(os.path.join(data_dir, "part-*.parquet")), root)
-    parent_raw = _load_manifest_raw(root, parent)
-    inherited = _inherited_sketch_cols(root, parent_raw)
-    if inherited:
-        _attach_sketches(spark, root, new_files, inherited)
-    inherited_b = _inherited_bloom_cols(root, parent_raw)
-    if inherited_b:
-        _attach_blooms(spark, root, new_files, inherited_b)
-    inline = keep + new_files
-    spilled_loc: str | None = None
-    if keep and len(inline) > _SEGMENT_SPILL_ENTRIES:
-        ref = _spill_segment(root, sid, keep)
-        spilled_loc = ref["loc"]
-        kept_segs = kept_segs + [ref]
-        inline = list(new_files)
-    total_rows = sum(s["rows"] for s in kept_segs) + sum(f["rows"] for f in inline)
-    total_bytes = sum(s["bytes"] for s in kept_segs) + sum(f["bytes"] for f in inline)
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": "replace",
-        "schema_ddl": df.schema.simpleString(),
-        "schema_json": df.schema.json(),
-        "total_rows": total_rows,
-        "total_bytes": total_bytes,
-        "files": inline,
-    }
-    if parent_raw.get("constraints"):
-        # compaction resets the LAYOUT declaration (bin-pack breaks
-        # clustering) but never the contract
-        manifest["constraints"] = parent_raw["constraints"]
-    if kept_segs:
-        manifest["file_segments"] = kept_segs
-    try:
-        _commit_manifest(root, parent, sid, manifest, guard)
-    except ConcurrentCommitError:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        if spilled_loc is not None:
-            try:
-                os.unlink(os.path.join(_manifest_dir(root), spilled_loc))
-            except OSError:
-                pass
-        raise
-    return sid
+        n_files = max(1, -(-sum(f["bytes"] for f in small) // threshold))
+        df = spark.read.schema(_committed_schema(m)).parquet(
+            *[_abs_path(root, f["path"]) for f in small]
+        )
+        new_files = txn.write(df.repartition(n_files))
+        txn.inherit_indexes(spark, new_files)
+        segments, keep = txn.spill(kept_segs, keep, new_files)
+        # bin-pack breaks clustering: the layout declaration resets (the
+        # constraint contract carries)
+        return txn.commit(
+            "replace", keep + new_files, segments, schema=df.schema, reset_layout=True
+        )
 
 
 def merge_segments(root: str, guard=None, target_entries: int | None = None) -> int:
@@ -3042,52 +2811,28 @@ def merge_segments(root: str, guard=None, target_entries: int | None = None) -> 
     )
     if target < 2:
         raise ValueError(f"target_entries must be >= 2, got {target_entries}")
-    parent = current_snapshot_id(root)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    raw = _load_manifest_raw(root, parent)
-    if raw.get("row_filters"):
-        # merging rewrites segment LOCS, which row-filter scopes match on
-        # — a merged segment mixing scope and non-scope files is not
-        # representable, so the reorganization waits for materialization
-        raise ValueError(
-            f"table at {root} has merge-on-read delete filter(s) pending — "
-            f"run materialize_deletes first, then merge_segments"
+    with _SnapshotTxn(root, guard, require_parent=True) as txn:
+        raw = txn.parent_raw
+        if raw.get("row_filters"):
+            # merging rewrites segment LOCS, which row-filter scopes match on
+            # — a merged segment mixing scope and non-scope files is not
+            # representable, so the reorganization waits for materialization
+            raise ValueError(
+                f"table at {root} has merge-on-read delete filter(s) pending — "
+                f"run materialize_deletes first, then merge_segments"
+            )
+        refs = raw.get("file_segments") or []
+        small_locs = {r["loc"] for r in refs if r["n_files"] < target // 2}
+        if len(small_locs) < 2:
+            return txn.parent
+        entries: list[dict[str, Any]] = []
+        for r in refs:  # preserve relative order of the merged entries
+            if r["loc"] in small_locs:
+                entries.extend(_read_segment(root, r["loc"]))
+        new_refs = [txn.segment(entries[i : i + target]) for i in range(0, len(entries), target)]
+        return txn.commit(
+            "replace", raw["files"], [r for r in refs if r["loc"] not in small_locs] + new_refs
         )
-    refs = raw.get("file_segments") or []
-    small_locs = {r["loc"] for r in refs if r["n_files"] < target // 2}
-    if len(small_locs) < 2:
-        return parent
-    entries: list[dict[str, Any]] = []
-    for r in refs:  # preserve relative order of the merged entries
-        if r["loc"] in small_locs:
-            entries.extend(_read_segment(root, r["loc"]))
-    sid = parent + 1
-    new_refs: list[dict[str, Any]] = []
-    for i in range(0, len(entries), target):
-        new_refs.append(_spill_segment(root, sid, entries[i : i + target]))
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": "replace",
-        "schema_ddl": raw["schema_ddl"],
-        "schema_json": raw["schema_json"],
-        "total_rows": raw["total_rows"],
-        "total_bytes": raw["total_bytes"],
-        "files": raw["files"],
-        "file_segments": [r for r in refs if r["loc"] not in small_locs] + new_refs,
-    }
-    _carry_layout(manifest, raw)
-    try:
-        _commit_manifest(root, parent, sid, manifest, guard)
-    except ConcurrentCommitError:
-        for ref in new_refs:
-            try:
-                os.unlink(os.path.join(_manifest_dir(root), ref["loc"]))
-            except OSError:
-                pass
-        raise
-    return sid
 
 
 def rollback_table(root: str, to_snapshot_id: int, guard=None) -> int:
@@ -3119,44 +2864,27 @@ def rollback_table(root: str, to_snapshot_id: int, guard=None) -> int:
     manifest was expired by retention — an expired snapshot is gone by
     contract). Rolling back to CURRENT is a no-op returning CURRENT.
     """
-    parent = current_snapshot_id(root)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot at {root}")
-    if to_snapshot_id == parent:
-        return parent
-    if to_snapshot_id > parent:
-        raise ValueError(
-            f"cannot roll FORWARD: target {to_snapshot_id} is newer than "
-            f"CURRENT {parent}"
+    with _SnapshotTxn(root, guard, require_parent=True) as txn:
+        if to_snapshot_id == txn.parent:
+            return txn.parent
+        if to_snapshot_id > txn.parent:
+            raise ValueError(
+                f"cannot roll FORWARD: target {to_snapshot_id} is newer than "
+                f"CURRENT {txn.parent}"
+            )
+        target = _load_manifest_raw(root, to_snapshot_id)  # raises if expired
+        return txn.commit(
+            "rollback",
+            target["files"],
+            target.get("file_segments") or [],
+            schema=target,
+            total_rows=target["total_rows"],
+            rolled_back_to=to_snapshot_id,
+            **{
+                k: target.get(k)
+                for k in ("row_filters", "sort_by", "zorder", "upsert_key", "upsert_keys")
+            },
         )
-    target = _load_manifest_raw(root, to_snapshot_id)  # raises if expired
-    cur = _load_manifest_raw(root, parent)
-    sid = parent + 1
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "operation": "rollback",
-        "rolled_back_to": to_snapshot_id,
-        "schema_ddl": target["schema_ddl"],
-        "schema_json": target["schema_json"],
-        "total_rows": target["total_rows"],
-        "total_bytes": target["total_bytes"],
-        "files": target["files"],
-    }
-    for k in (
-        "file_segments",
-        "row_filters",
-        "sort_by",
-        "zorder",
-        "upsert_key",
-        "upsert_keys",
-    ):
-        if target.get(k):
-            manifest[k] = target[k]
-    if cur.get("constraints"):
-        manifest["constraints"] = cur["constraints"]
-    _commit_manifest(root, parent, sid, manifest, guard)
-    return sid
 
 
 def expire_snapshots(
@@ -3629,7 +3357,6 @@ def vacuum(root: str, min_age_s: float = 0.0) -> list[str]:
     data-write a commit can take (e.g. 3600); the default 0 keeps the
     eager behavior for single-writer maintenance windows where no commit
     can be in flight."""
-    import shutil
     import time
 
     cur = current_snapshot_id(root)

@@ -185,37 +185,39 @@ def test_two_process_tag_create_race(tmp_path, guard_name):
 
 
 def _set_constraints_child(root, guard_name, cname, barrier, cas_barrier, q):
-    import ovalspark.sources.constraints as cons
+    import ovalspark.sources.snapshots as sn
     from ovalspark.sources.constraints import ConstraintError, set_constraints
     from ovalspark.sources.snapshots import ConcurrentCommitError
 
-    real_commit = cons._commit_manifest
+    real_commit = sn._commit_manifest
+    hooked = []
 
     def commit_after_both_read(*args, **kwargs):
         # hold the first attempt until BOTH writers have read the same
         # parent and built their manifests, so the two CAS attempts
         # always contend (the loser's retry goes straight through)
-        cons._commit_manifest = real_commit
+        sn._commit_manifest = real_commit
+        hooked.append(True)
         cas_barrier.wait(timeout=60)
         return real_commit(*args, **kwargs)
 
-    cons._commit_manifest = commit_after_both_read
+    sn._commit_manifest = commit_after_both_read
     try:
         barrier.wait(timeout=60)
         con = {"name": cname, "kind": "not_null", "column": "doc_id"}
         try:
             sid = set_constraints(root, [con], mode="add", validate=False,
                                   guard=guard_name)
-            q.put((cname, "ok", sid))
+            q.put((cname, "ok", sid, bool(hooked)))
             return
         except (ConcurrentCommitError, ConstraintError):
             pass
         # loser retries against the winner's head and must land on top
         sid = set_constraints(root, [con], mode="add", validate=False,
                               guard=guard_name)
-        q.put((cname, "retried-ok", sid))
+        q.put((cname, "retried-ok", sid, bool(hooked)))
     except BaseException as e:  # pragma: no cover - diagnostics only
-        q.put((cname, f"err:{type(e).__name__}:{e}", None))
+        q.put((cname, f"err:{type(e).__name__}:{e}", None, bool(hooked)))
 
 
 @pytest.mark.parametrize("guard_name", GUARDS)
@@ -243,7 +245,11 @@ def test_two_process_set_constraints_race(tmp_path, guard_name):
         [p.start() for p in procs]
         [p.join(timeout=120) for p in procs]
         assert all(p.exitcode == 0 for p in procs), [p.exitcode for p in procs]
-        results = {n: (s, sid) for n, s, sid in (q.get(timeout=10), q.get(timeout=10))}
+        got = [q.get(timeout=10), q.get(timeout=10)]
+        # the contention hook must have fired in both writers, or the race
+        # silently stops contending when the commit path moves again
+        assert all(hooked for *_, hooked in got), got
+        results = {n: (s, sid) for n, s, sid, _ in got}
         statuses = sorted(s for s, _ in results.values())
         assert statuses == ["ok", "retried-ok"], results
         assert current_snapshot_id(root) == 3

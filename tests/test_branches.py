@@ -281,7 +281,7 @@ def test_publish_cas_loses_cleanly_to_concurrent_writer(spark, tmp_path, monkeyp
     """A main writer racing the publish: the publish's CAS loses, raises
     ConcurrentCommitError, and the branch is UNTOUCHED — retry with
     allow_divergent_base succeeds against the new head."""
-    import ovalspark.sources.branches as br
+    import ovalspark.sources.snapshots as sn
     from ovalspark.sources.snapshots import ConcurrentCommitError
 
     root = str(tmp_path / "t")
@@ -289,17 +289,18 @@ def test_publish_cas_loses_cleanly_to_concurrent_writer(spark, tmp_path, monkeyp
     broot = create_branch(root, "b")
     snapshot_write(_docs(spark, 10, 13), broot)
 
-    real = br._commit_new_files
+    real = sn._commit_manifest
 
-    def race_then_commit(r, parent, sid, *a, **k):
+    def race_then_commit(*a, **k):
         # a concurrent writer lands between parent resolution and the CAS
+        monkeypatch.setattr(sn, "_commit_manifest", real)
         snapshot_write(_docs(spark, 90, 92), root, mode="append")
-        return real(r, parent, sid, *a, **k)
+        return real(*a, **k)
 
-    monkeypatch.setattr(br, "_commit_new_files", race_then_commit)
+    monkeypatch.setattr(sn, "_commit_manifest", race_then_commit)
     with pytest.raises(ConcurrentCommitError):
         publish_branch(root, "b", mode="append")
-    monkeypatch.setattr(br, "_commit_new_files", real)
+    monkeypatch.setattr(sn, "_commit_manifest", real)
 
     # branch intact, retry against the moved head
     assert branch_read(spark, root, "b").count() == 3
