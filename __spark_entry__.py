@@ -734,7 +734,7 @@ def _q40_span_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "writer_id",
         F.date_format("written_at", "yyyy-MM-dd HH:mm:ss").alias("written_at"),
     )
-    return _ordered(v, "partition_id", "doc_id", "span_idx", "field")
+    return _ordered(v, "partition_id", "doc_id", "span_idx", "field", "violation_class")
 
 
 def _q40_oracle(d: str | None = None) -> str:

@@ -107,13 +107,6 @@ def minhash_from_base(base: Column, n_hashes: int = 12) -> list[Column]:
     return out
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 12) -> list[Column]:
-    """Single-expression convenience form (base inlined per component) —
-    prefer the two-step ``minhash_base`` + ``minhash_from_base`` in jobs;
-    values are identical (tested)."""
-    return minhash_from_base(minhash_base(shingles), n_hashes)
-
-
 def minhash_duplicates(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -76,23 +76,6 @@ def generate_media_assets(spark: SparkSession, n_assets: int, seed: int = 42, pa
     )
 
 
-def _fake_decode_features(payload: bytes, dim: int) -> list[float]:
-    """Deterministic stand-in for a real decoder+encoder: folds the bytes
-    into a fixed-dim float vector. Replace with e.g. PIL decode + CNN
-    embedding; the Spark-side contract (bytes in, float vector out) is
-    identical."""
-    import numpy as np
-
-    if not payload:
-        return [0.0] * dim
-    arr = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-    pad = (-len(arr)) % dim
-    if pad:
-        arr = np.concatenate([arr, np.zeros(pad)])
-    folded = arr.reshape(-1, dim).mean(axis=0)
-    return ((folded - 127.5) / 127.5).astype("float32").tolist()
-
-
 def extract_features(
     assets: DataFrame,
     dim: int = 16,
@@ -105,14 +88,18 @@ def extract_features(
     is processed vectorized and yielded immediately — constant memory per
     task regardless of table size.
 
-    NOTE: the default kernel is redefined inside this function (not a
+    NOTE: the default kernel is defined inside this function (not a
     module-global reference) so the closure cloudpickles BY VALUE and
     executors don't need the ovalspark package on their PYTHONPATH. A
     user-supplied ``kernel`` must be importable on executors or likewise
     self-contained."""
     if kernel is None:
 
-        def kernel(payload: bytes, d: int) -> list[float]:  # noqa: F811 — by-value copy of _fake_decode_features
+        def kernel(payload: bytes, d: int) -> list[float]:
+            """Deterministic stand-in for a real decoder+encoder: folds
+            the bytes into a fixed-dim float vector. A real kernel (e.g.
+            PIL decode + CNN embedding) keeps the same contract: bytes
+            in, float vector out."""
             import numpy as np
 
             if not payload:

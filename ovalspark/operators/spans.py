@@ -35,6 +35,9 @@ proportional to corruption, not to data volume.
 
 from __future__ import annotations
 
+import weakref
+from typing import Any, Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -90,6 +93,22 @@ def _field_viol(field: str, expected: Column, actual: Column) -> Column:
 _EMPTY_VIOLS = "array<struct<field:string,expected:string,actual:string>>"
 
 
+# SparkContext -> {key: Column trees}. The span checks are a few thousand
+# py4j round trips to build and the same for every call, so each live
+# context builds them once. Keyed on the context object, never on id():
+# a restarted session may reuse a dead context's id, and its Columns
+# belong to the dead gateway.
+_EXPRS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _memo(df: DataFrame, key: tuple, build: Callable[[], Any]) -> Any:
+    """``build()``'s Columns for ``df``'s SparkContext, built on first use."""
+    per_sc = _EXPRS.setdefault(df.sparkSession.sparkContext, {})
+    if key not in per_sc:
+        per_sc[key] = build()
+    return per_sc[key]
+
+
 def validate_spans(
     docs: DataFrame,
     catalog: DataFrame,
@@ -116,19 +135,33 @@ def validate_spans(
     stay inside codegen, and the single fast-path predicate drops clean
     spans before any violation-row construction happens. Output row count
     is proportional to corruption, not table size.
+
+    Building the frame is cheap after the first call in a SparkContext:
+    the catalog projection, the join's projection and every span check
+    are Column trees built once per context (``span_checks_joined``), so
+    a call costs a handful of DataFrame calls and no Spark job.
     """
-    cat = catalog.filter(F.col("exists")).select(*key, "generation", "n_spans", "writer_id")
+    exists, cat_cols, joined = _memo(
+        docs,
+        ("join", key),
+        lambda: (
+            F.col("exists"),
+            [F.col(k) for k in (*key, "generation", "n_spans", "writer_id")],
+            [
+                F.col("partition_id"),
+                F.col("doc_id"),
+                F.col("d.spans").alias("spans"),
+                F.col("c.generation").alias("generation"),
+                F.col("c.n_spans").alias("n_spans"),
+                F.col("c.writer_id").alias("writer_id"),
+                F.col("written_at"),
+            ],
+        ),
+    )
+    cat = catalog.filter(exists).select(*cat_cols)
     if broadcast_catalog:
         cat = F.broadcast(cat)
-    j = docs.alias("d").join(cat.alias("c"), list(key)).select(
-        "partition_id",
-        "doc_id",
-        F.col("d.spans").alias("spans"),
-        F.col("c.generation").alias("generation"),
-        F.col("c.n_spans").alias("n_spans"),
-        F.col("c.writer_id").alias("writer_id"),
-        "written_at",
-    )
+    j = docs.alias("d").join(cat.alias("c"), list(key)).select(*joined)
     return span_checks_joined(j, n_assets)
 
 
@@ -147,17 +180,32 @@ def span_checks_joined(j: DataFrame, n_assets: int = sp.DEFAULT_N_ASSETS) -> Dat
     scan+join executed TWICE (measured ~11 s of a ~40 s single-core run —
     BASELINE.md round 3). One scan, one join, one explode now feeds every
     check; clean spans are dropped by one codegen'd predicate before any
-    violation construction."""
-    e = j.select(
-        "partition_id",
-        "doc_id",
-        "generation",
-        "writer_id",
-        "written_at",
+    violation construction.
+
+    Every caller (``validate_spans``, ``fused.validate_all``, the delta
+    and tail verifiers, the stream validator's micro-batches, q40) goes
+    through here. The four Column lists (the pre-explode projection, the
+    ``size_mismatch | dirty`` predicate, the flat select with its
+    ``explode`` and the final select with the class chain) are built by
+    ``_span_exprs`` once per (SparkContext, ``n_assets``); a call then
+    makes four DataFrame calls. The Columns hold only unresolved names,
+    so the plan is the one a fresh build gives."""
+    proj, keep, flat, final = _memo(j, ("checks", n_assets), lambda: _span_exprs(n_assets))
+    return j.select(*proj).filter(keep).select(*flat).select(*final)
+
+
+def _span_exprs(n_assets: int) -> tuple[list[Column], Column, list[Column], list[Column]]:
+    """Build ``span_checks_joined``'s four Column lists."""
+    proj = [
+        F.col("partition_id"),
+        F.col("doc_id"),
+        F.col("generation"),
+        F.col("writer_id"),
+        F.col("written_at"),
         F.col("n_spans").alias("n_expected"),
         F.size("spans").alias("n_actual"),
         F.posexplode_outer("spans").alias("i", "s"),
-    )
+    ]
     i, s = F.col("i"), F.col("s")
     doc_id, gen, wid = F.col("doc_id"), F.col("generation"), F.col("writer_id")
     n_expected, n_actual = F.col("n_expected"), F.col("n_actual")
@@ -224,14 +272,14 @@ def span_checks_joined(j: DataFrame, n_assets: int = sp.DEFAULT_N_ASSETS) -> Dat
     ).otherwise(empty)
     span_arr = F.when(dirty, F.concat(struct_checks, text_checks)).otherwise(empty)
 
-    flat = e.filter(size_mismatch | dirty).select(
-        "partition_id",
-        "doc_id",
+    flat = [
+        F.col("partition_id"),
+        F.col("doc_id"),
         i.cast("int").alias("i"),
         F.explode(F.concat(size_arr, span_arr)).alias("v"),
-        "writer_id",
-        "written_at",
-    )
+        F.col("writer_id"),
+        F.col("written_at"),
+    ]
 
     cls = F.lit(None).cast("string")
     for fld, c in FIELD_CLASS.items():
@@ -240,14 +288,15 @@ def span_checks_joined(j: DataFrame, n_assets: int = sp.DEFAULT_N_ASSETS) -> Dat
         F.coalesce(cls, F.lit("OFFSET_DISORDER"))  # offset_text
     )
 
-    return flat.select(
-        "partition_id",
-        "doc_id",
+    final = [
+        F.col("partition_id"),
+        F.col("doc_id"),
         F.when(F.col("v.field") == "n_spans", F.lit(None).cast("int")).otherwise(F.col("i")).alias("span_idx"),
         F.col("v.field").alias("field"),
         F.col("v.expected").alias("expected"),
         F.col("v.actual").alias("actual"),
         cls.alias("violation_class"),
-        "writer_id",
-        "written_at",
-    )
+        F.col("writer_id"),
+        F.col("written_at"),
+    ]
+    return proj, size_mismatch | dirty, flat, final

@@ -17,12 +17,21 @@ resumed run emits byte-identical files to an uninterrupted one
 
 Scale shape: the per-partition filter is a pushdown-friendly predicate on
 ``partition_id`` (partition pruning under an Iceberg/parquet layout
-partitioned by it); counts per partition are one small groupBy; the only
-driver-side data is one record per (constraint, partition).
+partitioned by it); input row counts per partition are one small groupBy
+per pass. Violation counts per partition come from the sink files the
+constraint's write just produced, counted on the driver with no Spark
+job: the line count of each uncompressed JSON part file, or the parquet
+footers' ``num_rows``. The JSON count reads every violation byte once on
+the driver, which is small because violations are small by design. The
+sink must therefore be on the local filesystem (as the manifest already
+is): ``run_plan`` refuses any other ``out_dir`` up front. The only
+driver-side data otherwise is one record per (constraint, partition).
 """
 
 from __future__ import annotations
 
+import glob
+import os
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -83,9 +92,56 @@ def _write_canonical(viol: DataFrame, out_dir: str, fmt: str = "json") -> None:
             .write.mode("overwrite")
             .partitionBy("partition_id")
         )
-        w.json(out_dir) if fmt == "json" else w.parquet(out_dir)
+        # uncompressed JSON is one row per line: _sink_counts counts lines
+        w.json(out_dir, compression="none") if fmt == "json" else w.parquet(out_dir)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+
+def _local_path(spark, out_dir: str) -> str:
+    """``out_dir`` as a local filesystem path, or ``ValueError``. The
+    violation counts are read from the sink files with ``os``/``glob``
+    (and the manifest is written the same way), so a sink on any other
+    filesystem would count nothing and record a false pass. Resolved from
+    the URI scheme, or ``fs.defaultFS`` for a path without one; no
+    filesystem is opened."""
+    from urllib.parse import urlparse
+
+    scheme = urlparse(out_dir).scheme
+    if not scheme:
+        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+        if urlparse(default_fs).scheme not in ("", "file"):
+            raise ValueError(f"out_dir {out_dir!r} resolves to {default_fs}; the violation sink must be local")
+        return out_dir
+    if scheme != "file":
+        raise ValueError(f"out_dir {out_dir!r} is not on the local filesystem; the violation sink must be local")
+    return urlparse(out_dir).path
+
+
+def _sink_counts(out_dir: str, name: str, fmt: str) -> dict[int | None, int]:
+    """partition_id -> rows in ``_write_canonical``'s files under
+    ``out_dir/name``: the line count of the uncompressed JSON part files,
+    or the sum of the parquet footers' ``num_rows``. No directory means
+    no violations; ``__HIVE_DEFAULT_PARTITION__`` is the NULL partition."""
+    rows = _json_rows if fmt == "json" else _parquet_rows
+    counts: dict[int | None, int] = {}
+    for pdir in glob.glob(os.path.join(glob.escape(os.path.join(out_dir, name)), "partition_id=*")):
+        v = pdir.rsplit("=", 1)[1]
+        pid = None if v == "__HIVE_DEFAULT_PARTITION__" else int(v)
+        parts = glob.glob(os.path.join(glob.escape(pdir), "part-*"))
+        counts[pid] = counts.get(pid, 0) + sum(rows(f) for f in parts)
+    return counts
+
+
+def _json_rows(path: str) -> int:
+    with open(path, "rb") as f:
+        return sum(chunk.count(b"\n") for chunk in iter(lambda: f.read(1 << 20), b""))
+
+
+def _parquet_rows(path: str) -> int:
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_rows
 
 
 def run_plan(
@@ -102,11 +158,13 @@ def run_plan(
 ) -> RunResult:
     import time
 
-    from pyspark.errors import AnalysisException
     from pyspark.sql import Observation
 
     from ovalspark.logging import NullLogger
 
+    if sink_format not in ("json", "parquet"):
+        raise ValueError(f"sink_format must be json|parquet, got {sink_format!r}")
+    local_out = _local_path(docs.sparkSession, out_dir)
     log = logger if logger is not None else NullLogger()
     manifest = Manifest.load_or_create(manifest_path, run_id=run_id)
     all_parts = sorted(r.partition_id for r in catalog.select("partition_id").distinct().collect())
@@ -162,34 +220,12 @@ def run_plan(
         viol = c.fn(d_in, c_in, assets)
         obs_out = Observation(f"{c.name}-viols")
         viol = viol.observe(obs_out, F.count(F.lit(1)).alias("violations_found"))
-        if sink_format not in ("json", "parquet"):
-            raise ValueError(f"sink_format must be json|parquet, got {sink_format!r}")
         cdir = f"{out_dir}/{c.name}"
         _write_canonical(viol, cdir, fmt=sink_format)
-        # count per-partition violations from the WRITTEN output, not by
-        # re-running the constraint: a second `viol.groupBy(...).count()`
-        # would recompute the whole plan (a full extra pass over docs per
-        # constraint); the written violation files are tiny by design.
-        spark = viol.sparkSession
-        try:
-            reader = spark.read.schema(
-                "doc_id string, span_idx int, field string, expected string, "
-                "actual string, violation_class string, writer_id int, "
-                "written_at timestamp, partition_id int"
-            )
-            written = reader.json(cdir) if sink_format == "json" else reader.parquet(cdir)
-            vcounts = {
-                r.partition_id: r.n
-                for r in written.groupBy("partition_id").agg(F.count("*").alias("n")).collect()
-            }
-        except AnalysisException as e:
-            # ONLY path-not-found means "zero violations ever written for
-            # this constraint" — any other failure (transient FS error,
-            # corrupt output, schema drift) must fail the run loudly, not
-            # silently record a passing verdict.
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            vcounts = {}
+        # count per-partition violations from the files just written, on
+        # the driver: re-running the constraint would be a full extra pass
+        # over docs, and a Spark read-back of the sink costs two jobs
+        vcounts = _sink_counts(local_out, c.name, sink_format)
         # live-observed counter; a dynamic-overwrite write of an EMPTY
         # violations table skips its result stage, so the metrics row never
         # materializes — fall back to the written-output count (identical
@@ -215,7 +251,7 @@ def run_plan(
         manifest.record_observed(c.name, c.version, observed)
         manifest.save()
         # only the partitions validated in THIS pass count toward fail-fast
-        # (the read-back includes previously-written partitions on resume)
+        # (the sink holds previously-written partitions on resume)
         new_viols = sum(vcounts.get(p, 0) for p in todo)
         log.info(
             "constraint.done",

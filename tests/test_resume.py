@@ -159,3 +159,99 @@ def test_parquet_sink_matches_json(world, tmp_path):
         return out
 
     assert digest(str(tmp_path / "op")) == digest(str(tmp_path / "op2"))
+
+
+VIOLATIONS_DDL = (
+    "doc_id string, span_idx int, field string, expected string, actual string, "
+    "violation_class string, writer_id int, written_at timestamp, partition_id int"
+)
+
+
+def _spark_counts(spark, out, name, fmt):
+    reader = spark.read.schema(VIOLATIONS_DDL)
+    df = reader.json(f"{out}/{name}") if fmt == "json" else reader.parquet(f"{out}/{name}")
+    return {r.partition_id: r["count"] for r in df.groupBy("partition_id").count().collect()}
+
+
+def _assert_counts_match_files(spark, out, man, fmt):
+    m = json.load(open(man))
+    checked = 0
+    for name, rec in m["constraints"].items():
+        got = _spark_counts(spark, out, name, fmt)
+        for pid, r in rec["partitions"].items():
+            assert r["violation_count"] == got.get(int(pid), 0), (name, pid)
+            checked += r["violation_count"]
+    assert checked > 0
+
+
+@pytest.mark.parametrize("fmt", ["json", "parquet"])
+def test_violation_counts_equal_spark_count_of_written_files(spark, world, tmp_path, fmt):
+    """The manifest's per-(constraint, partition) counts, taken from the
+    sink files on the driver, equal Spark's count of the same files, on a
+    fresh run and on a resumed pass over an output dir that already holds
+    the other partitions' files."""
+    spec, cat, bad, assets = world
+    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    out, man = str(tmp_path / "out"), str(tmp_path / "m.json")
+    run_plan(plan, bad, cat, assets, out, man, sink_format=fmt)
+    _assert_counts_match_files(spark, out, man, fmt)
+
+    m = Manifest.load_or_create(man)
+    for rec in m.constraints.values():
+        for pid in list(rec["partitions"]):
+            if int(pid) >= 2:
+                del rec["partitions"][pid]
+    m.save()
+    for pdir in glob.glob(f"{out}/*/partition_id=*"):
+        if int(pdir.rsplit("=", 1)[1]) >= 2:
+            shutil.rmtree(pdir)
+    run_plan(plan, bad, cat, assets, out, man, sink_format=fmt)
+    _assert_counts_match_files(spark, out, man, fmt)
+
+
+def test_non_local_out_dir_refused_up_front(spark, world, tmp_path, monkeypatch):
+    """The counts are read from local files, so a sink on another
+    filesystem would record a false pass: refused before any py4j call,
+    so before any job or filesystem connection."""
+    import py4j.clientserver
+
+    spec, cat, bad, assets = world
+    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    calls = []
+    send = py4j.clientserver.JavaClient.send_command
+    monkeypatch.setattr(
+        py4j.clientserver.JavaClient,
+        "send_command",
+        lambda self, *a, **k: (calls.append(a), send(self, *a, **k))[1],
+    )
+    man = tmp_path / "m.json"
+    with pytest.raises(ValueError, match="local"):
+        run_plan(plan, bad, cat, assets, "hdfs://nowhere/x", str(man))
+    assert calls == []
+    assert not man.exists()
+
+
+def test_run_plan_job_count(spark, world, tmp_path):
+    """One default-plan run over this world runs 24 jobs: the partition
+    list, the input lineage counts and each constraint's write (with its
+    broadcasts). Reading each dirty constraint's sink back with Spark
+    cost 10 more (34)."""
+    spec, cat, bad, assets = world
+    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    sc = spark.sparkContext
+    group = "test_resume.run_plan_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        run_plan(plan, bad, cat, assets, str(tmp_path / "out"), str(tmp_path / "m.json"))
+    finally:
+        sc.setJobGroup("test_resume.idle", "idle")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [
+        tracker.getStageInfo(s).name
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    ]
+    assert len(jobs) == 24, (len(jobs), stages)
