@@ -76,12 +76,6 @@ def build_parser() -> argparse.ArgumentParser:
     v.add_argument("--manifest", default=None, help="default: <out>/manifest.json")
     v.add_argument("--resume", action="store_true", help="reuse an existing manifest (O3); without it a fresh run refuses to overwrite")
     v.add_argument("--fail-fast", action="store_true", help="abort on first dirty constraint (V12)")
-    v.add_argument("--broadcast-catalog", action="store_true")
-    v.add_argument(
-        "--fused",
-        action="store_true",
-        help="single-pass mode: all core checks from one docs⋈catalog scan (throughput; resume is per-run — the fused constraint reruns whole unless it fully completed)",
-    )
     v.add_argument("--run-id", default="run-0")
     v.add_argument(
         "--sink-format",
@@ -439,7 +433,7 @@ def main(argv: list[str] | None = None) -> int:
             print("--snapshot-id requires --table-format snapshot", file=sys.stderr)
             return 2
         ts = TableSet.load(spark, args.root, fmt=args.table_format, snapshot_id=args.snapshot_id)
-        plan = default_plan(broadcast_catalog=args.broadcast_catalog, span_bounds=args.spans, fused=args.fused)
+        plan = default_plan(span_bounds=args.spans)
         try:
             res = run_plan(
                 plan, ts.docs, ts.catalog, ts.assets, args.out, manifest,

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ovalspark.functions import spans as sp
 from ovalspark.operators.existence import check_existence
 from ovalspark.operators.spans import VIOLATION_SCHEMA, validate_spans
+from ovalspark.session import _empty
 from ovalspark.sources.snapshots import _committed_schema, _load_manifest_raw, manifest_diff
 
 
@@ -62,7 +63,7 @@ def validate_snapshot_delta(
 
         # no files added: everything the catalog expected is lost (the
         # LOST leg of check_existence needs no docs side at all)
-        return spark.createDataFrame([], VIOLATION_SCHEMA).unionByName(
+        return _empty(spark, VIOLATION_SCHEMA).unionByName(
             catalog.filter(F.col("exists")).select(
                 F.col("partition_id").cast("int").alias("partition_id"),
                 "doc_id",
@@ -130,7 +131,6 @@ def validate_delete(
         )
     from ovalspark.sources.snapshots import _abs_path  # scoped file list
 
-    empty = spark.createDataFrame([], VIOLATION_SCHEMA)
     if m.get("mor"):
         # a merge-on-read delete rewrote nothing: visibility is a READ
         # property, so the read-back verifies the stratified read itself
@@ -149,7 +149,7 @@ def validate_delete(
         else:
             files = manifest_diff(root, m["parent_id"], m["snapshot_id"])
         if not files:
-            return empty  # delete rewrote everything away: nothing can survive
+            return _empty(spark, VIOLATION_SCHEMA)  # delete rewrote everything away: nothing can survive
         df = spark.read.parquet(*files)
     doc_id = F.col("doc_id").cast("string") if "doc_id" in df.columns else F.lit(None).cast("string")
     if pred_sql is not None:
@@ -213,7 +213,7 @@ def validate_upsert(
     key = m["upsert_key"]
     added = manifest_diff(root, m["parent_id"], m["snapshot_id"])
     if not added:  # zero staged rows never commit; defensive
-        return spark.createDataFrame([], VIOLATION_SCHEMA)
+        return _empty(spark, VIOLATION_SCHEMA)
     # the commit enforced key-unique staging: no distinct() needed
     staged = spark.read.schema(_committed_schema(m)).parquet(*added).select(key)
     counts = (
@@ -341,26 +341,23 @@ def validate_replace(
 
     want = _sig(pm, removed)
     got = _sig(m, added)
-    empty = spark.createDataFrame([], VIOLATION_SCHEMA)
     if want == got:
-        return empty
-    return empty.unionByName(
-        spark.createDataFrame(
-            [
-                (
-                    None,
-                    f"snapshot={m['snapshot_id']}",
-                    None,
-                    "replace_equivalence",
-                    f"rows={want[0]} hashsum={want[1]}",
-                    f"rows={got[0]} hashsum={got[1]}",
-                    "REPLACE_MISMATCH",
-                    None,
-                    None,
-                )
-            ],
-            VIOLATION_SCHEMA,
-        )
+        return _empty(spark, VIOLATION_SCHEMA)
+    return spark.createDataFrame(
+        [
+            (
+                None,
+                f"snapshot={m['snapshot_id']}",
+                None,
+                "replace_equivalence",
+                f"rows={want[0]} hashsum={want[1]}",
+                f"rows={got[0]} hashsum={got[1]}",
+                "REPLACE_MISMATCH",
+                None,
+                None,
+            )
+        ],
+        VIOLATION_SCHEMA,
     )
 
 

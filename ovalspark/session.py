@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -104,3 +105,30 @@ def _default_parallelism(master: str) -> int:
         except ValueError:
             return 8
     return 200  # cluster default; callers override per data size
+
+
+def _empty(spark: SparkSession, schema: StructType | str) -> DataFrame:
+    """An empty frame of ``schema`` (a StructType or DDL string) as a JVM
+    local relation. ``spark.createDataFrame([], schema)`` builds a Python
+    RDD instead, so every action over it starts Python workers (~1 s of
+    CPU); an action over this one runs no Spark job at all."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return _local(spark, schema, 0)
+
+
+def _one_row(spark: SparkSession) -> DataFrame:
+    """One row of no columns as a JVM local relation: a select of
+    constants over it is folded by the optimizer, so collecting it runs
+    no Spark job (over ``spark.range(1)`` it runs one)."""
+    return _local(spark, StructType([]), 1)
+
+
+def _local(spark: SparkSession, schema: StructType, n_rows: int) -> DataFrame:
+    """``n_rows`` rows of no values (so ``schema`` must have no fields
+    when ``n_rows`` > 0) as a JVM local relation."""
+    jvm, js = spark._jvm, spark._jsparkSession
+    rows = jvm.java.util.ArrayList()
+    for _ in range(n_rows):
+        rows.add(jvm.org.apache.spark.sql.RowFactory.create(spark._sc._gateway.new_array(jvm.java.lang.Object, 0)))
+    return DataFrame(js.createDataFrame(rows, js.parseDataType(schema.json())), spark)

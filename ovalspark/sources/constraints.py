@@ -91,6 +91,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ovalspark.session import _empty
 from ovalspark.sources.snapshots import (
     _abs_path,
     _committed_schema,
@@ -642,7 +643,7 @@ def audit_constraints(
         "rows": rows_out,
     }
     if not cons:
-        return spark.createDataFrame([], _REPORT_SCHEMA), detail
+        return _empty(spark, _REPORT_SCHEMA), detail
 
     entries = None  # expanded lazily: a pure-check contract never needs stats
 

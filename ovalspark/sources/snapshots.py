@@ -88,6 +88,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ovalspark.session import _empty, _one_row
+
 
 class SchemaMismatchError(ValueError):
     """An append's schema CONFLICTS with the table's committed schema —
@@ -1071,14 +1073,15 @@ class _SnapshotTxn:
         appends choose explicitly via ``sketch_cols``/``bloom_cols``;
         partial coverage is reported, not extrapolated)."""
         sketch: set[str] = set()
-        bloom: set[str] = set()
+        bloom: dict[str, float] = {}  # column -> the finest fpp any entry was built at
         for fe in _expand_manifest(self.root, self.parent_raw)["files"]:
             sketch.update((fe.get("hll") or {}).keys())
-            bloom.update((fe.get("bloom") or {}).keys())
+            for c, meta in (fe.get("bloom") or {}).items():
+                bloom[c] = min(bloom.get(c, 1.0), meta.get("fpp", _BLOOM_FPP))
         if sketch:
             _attach_sketches(spark, self.root, new_files, sorted(sketch))
-        if bloom:
-            _attach_blooms(spark, self.root, new_files, sorted(bloom))
+        for fpp in sorted(set(bloom.values())):
+            _attach_blooms(spark, self.root, new_files, sorted(c for c in bloom if bloom[c] == fpp), fpp)
 
     def segment(self, entries: list[dict[str, Any]]) -> dict[str, Any]:
         """Spill ``entries`` into a segment owned by this txn."""
@@ -1844,7 +1847,7 @@ def _read_strata(
             df = df.join(build, on, "left").filter(F.col("_k").isNull()).drop("_k", "_s")
         plain.append(df.drop(_STRATUM_COL))
     if not plain:
-        return spark.createDataFrame([], schema)
+        return _empty(spark, schema)
     return reduce(DataFrame.unionByName, plain)
 
 
@@ -2132,6 +2135,7 @@ def _attach_sketches(
 
 
 _BLOOM_H2_SALT = "ovalspark:bloom:h2"
+_BLOOM_FPP = 0.01  # snapshot_write's default bloom_fpp; recorded in an entry only when it differs
 
 
 def _attach_blooms(
@@ -2139,7 +2143,7 @@ def _attach_blooms(
     root: str,
     new_files: list[dict[str, Any]],
     cols: list[str] | str,
-    fpp: float = 0.01,
+    fpp: float = _BLOOM_FPP,
 ) -> None:
     """Attach per-file Bloom membership filters for ``cols`` to manifest
     entries — the equality-probe complement of min/max bounds: a point
@@ -2153,7 +2157,9 @@ def _attach_blooms(
     across the cluster, not a 1 GB driver collect. Sidecars live inside
     the commit's data dir (vacuum/retention lifecycle of the data files
     they describe); the manifest entry records {loc, m, k, dtype} per
-    column, ~100 bytes. NULLs are excluded (equality never matches
+    column, ~100 bytes, plus the ``fpp`` it was sized for when that is
+    not the default (so a rewrite rebuilds it at the same rate). NULLs
+    are excluded (equality never matches
     NULL); an all-NULL file records m=0, which the probe reads as
     "provably absent"."""
     if isinstance(cols, str):
@@ -2238,20 +2244,22 @@ def _attach_blooms(
             "m": int(r["m"]),
             "k": int(r["k"]),
             "dtype": dtypes[r["col"]],
+            **({} if the_fpp == _BLOOM_FPP else {"fpp": the_fpp}),
         }
     for fe in new_files:
         meta = by_file.get(os.path.basename(fe["path"]))
         if meta:
-            fe["bloom"] = meta
+            fe.setdefault("bloom", {}).update(meta)
 
 
 def _probe_hashes(spark: SparkSession, value, dtype: str) -> tuple[int, int]:
     """The probe value's (h1, h2) computed by the SAME JVM xxhash64
     expressions the write side used, cast to the column's committed
     type — a Python reimplementation of Spark's hash would be a silent
-    correctness cliff."""
+    correctness cliff. Over a one-row local relation the optimizer folds
+    them on the driver: no Spark job."""
     row = (
-        spark.range(1)
+        _one_row(spark)
         .select(
             F.xxhash64(F.lit(value).cast(dtype)).alias("h1"),
             F.xxhash64(F.lit(value).cast(dtype), F.lit(_BLOOM_H2_SALT)).alias("h2"),
@@ -2375,7 +2383,7 @@ def point_lookup(
     paths = point_lookup_files(spark, root, col, value, m_raw["snapshot_id"])
     schema = _committed_schema(m_raw)
     if not paths:
-        return spark.createDataFrame([], schema)
+        return _empty(spark, schema)
     return (
         spark.read.schema(schema)
         .parquet(*paths)
@@ -2418,7 +2426,7 @@ def manifest_ndv(
         "col string, ndv_estimate long, rows_covered long, n_rows long, coverage double"
     )
     if not rows:
-        return spark.createDataFrame([], out_schema)
+        return _empty(spark, out_schema)
     sdf = spark.createDataFrame(rows, "col string, sk string, file_rows long")
     est = sdf.groupBy("col").agg(
         F.round(
@@ -3556,7 +3564,7 @@ def snapshot_read(
         paths = [_abs_path(root, f["path"]) for f in _expand_manifest(root, m)["files"]]
     schema = _committed_schema(m)
     if not paths:
-        return spark.createDataFrame([], schema)
+        return _empty(spark, schema)
     return spark.read.schema(schema).parquet(*paths)
 
 

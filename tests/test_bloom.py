@@ -127,3 +127,56 @@ def test_bloom_validates_inputs(spark, tmp_path):
         snapshot_write(_docs(spark, 100), root, bloom_cols=["nope"])
     with pytest.raises(ValueError, match="bloom_fpp"):
         snapshot_write(_docs(spark, 100), root, bloom_cols=["doc_id"], bloom_fpp=2.0)
+
+
+def _jobs(spark, group, action):
+    """Spark jobs run by ``action()`` under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup("test_bloom.idle", "idle")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lookup_of_absent_key_runs_no_job(spark, tmp_path):
+    """A key the metadata rules out (by bounds or by every Bloom) reads
+    nothing: the empty result is a JVM local relation and the probe
+    hashes fold on the driver. An empty Python-built frame cost a job
+    that started Python workers, and the hashes one more."""
+    root = str(tmp_path / "t")
+    snapshot_write(_docs(spark, 2000).repartition(4), root, bloom_cols=["doc_id", "user"])
+    assert point_lookup_files(spark, root, "doc_id", 10**9) == []  # above every max
+    assert point_lookup_files(spark, root, "user", "nobody") == []  # every Bloom says absent
+    for col, value in (("doc_id", 10**9), ("user", "nobody")):
+        got = []
+        assert _jobs(spark, f"test_bloom.absent.{col}", lambda: got.extend(point_lookup(spark, root, col, value).collect())) == 0
+        assert got == []
+    # a present key still reads its rows
+    assert [r["user"] for r in point_lookup(spark, root, "user", "u-5").collect()][:1] == ["u-5"]
+
+
+def test_upsert_rebuilds_blooms_at_the_table_fpp(spark, tmp_path):
+    """A rewrite inherits the Bloom columns AND the rate they were sized
+    for: rebuilt at the default 0.01, a 0.001 table's new files carried
+    ~9.6 bits per row instead of ~14.4."""
+    root = str(tmp_path / "t")
+    docs = _docs(spark, 4000)
+    snapshot_write(docs.coalesce(1), root, bloom_cols=["doc_id"], bloom_fpp=0.001)
+    (base,) = load_manifest(root)["files"]
+    assert base["bloom"]["doc_id"]["fpp"] == 0.001
+    assert base["bloom"]["doc_id"]["m"] / base["rows"] >= 14
+    from ovalspark.sources.snapshots import snapshot_upsert
+
+    snapshot_upsert(spark, root, docs.filter(F.col("doc_id") < 2000).withColumn("v", F.lit(0).cast("bigint")).coalesce(1))
+    new = [fe for fe in load_manifest(root)["files"] if fe["path"] != base["path"]]
+    assert new
+    for fe in new:
+        meta = fe["bloom"]["doc_id"]
+        assert meta["fpp"] == 0.001
+        assert meta["m"] / fe["rows"] >= 14, meta
+    # the default rate is not recorded, so default manifests are unchanged
+    snapshot_write(docs.coalesce(1), str(tmp_path / "d"), bloom_cols=["doc_id"])
+    assert "fpp" not in load_manifest(str(tmp_path / "d"))["files"][0]["bloom"]["doc_id"]

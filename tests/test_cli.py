@@ -41,7 +41,7 @@ def test_cli_generate_validate_resume(spark, tmp_path, capsys):
     gen_line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert gen_line["shards"] == 2
 
-    rc = main(["validate", "--root", root, "--out", out, "--broadcast-catalog"])
+    rc = main(["validate", "--root", root, "--out", out])
     report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rc == 1 and report["passed"] is False
     assert report["totals"]["span_sequence"]["violations"] > 0

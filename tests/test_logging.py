@@ -57,7 +57,7 @@ def test_runner_emits_constraint_lifecycle(spark, small_world, tmp_path):
     spec, cat, docs, assets = small_world
     buf = io.StringIO()
     log = RunLogger(fmt="json", stream=buf)
-    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    plan = default_plan(spec.n_assets)
     run_plan(plan, docs, cat, assets, str(tmp_path / "o"), str(tmp_path / "m.json"), logger=log)
     events = [json.loads(line) for line in buf.getvalue().strip().splitlines()]
     done = {e["name"]: e for e in events if e["event"] == "constraint.done"}

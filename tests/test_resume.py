@@ -36,7 +36,7 @@ def world(small_world):
 
 def test_full_run_and_verdicts(world, tmp_path):
     spec, cat, bad, assets = world
-    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    plan = default_plan(spec.n_assets)
     res = run_plan(plan, bad, cat, assets, str(tmp_path / "out"), str(tmp_path / "manifest.json"))
     assert not res.passed
     assert set(res.verdicts) == set(range(spec.n_shards))
@@ -50,7 +50,7 @@ def test_observed_metrics_in_manifest(world, tmp_path):
     """Live df.observe counters (A1 / oval stat.go analog) land in the
     manifest per constraint and agree with the written-output counts."""
     spec, cat, bad, assets = world
-    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    plan = default_plan(spec.n_assets)
     out, man = str(tmp_path / "out"), str(tmp_path / "manifest.json")
     res = run_plan(plan, bad, cat, assets, out, man)
     m = json.load(open(man))
@@ -64,7 +64,7 @@ def test_observed_metrics_in_manifest(world, tmp_path):
 def test_rerun_is_noop(world, tmp_path):
     """Re-running a completed run skips everything (idempotent /start, O8)."""
     spec, cat, bad, assets = world
-    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    plan = default_plan(spec.n_assets)
     out, man = str(tmp_path / "out"), str(tmp_path / "manifest.json")
     run_plan(plan, bad, cat, assets, out, man)
     m1 = json.load(open(man))
@@ -79,7 +79,7 @@ def test_resume_partition_level_byte_identical(world, tmp_path):
     """Kill-after-k-partitions: drop partitions 2,3 from the manifest and
     delete their outputs; resume must regenerate them byte-identically."""
     spec, cat, bad, assets = world
-    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    plan = default_plan(spec.n_assets)
     out_a, man_a = str(tmp_path / "a"), str(tmp_path / "ma.json")
     run_plan(plan, bad, cat, assets, out_a, man_a)
     golden = _read_canonical(out_a)
@@ -108,7 +108,7 @@ def test_resume_after_fail_fast(world, tmp_path):
     constraint; resuming without it completes the rest and the combined
     output equals an uninterrupted run."""
     spec, cat, bad, assets = world
-    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    plan = default_plan(spec.n_assets)
     out_a, man_a = str(tmp_path / "a"), str(tmp_path / "ma.json")
     run_plan(plan, bad, cat, assets, out_a, man_a)
     golden = _read_canonical(out_a)
@@ -124,7 +124,7 @@ def test_resume_after_fail_fast(world, tmp_path):
 
 def test_constraint_version_bump_invalidates(world, tmp_path):
     spec, cat, bad, assets = world
-    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    plan = default_plan(spec.n_assets)
     out, man = str(tmp_path / "out"), str(tmp_path / "m.json")
     run_plan(plan, bad, cat, assets, out, man)
     m = Manifest.load_or_create(man)
@@ -139,7 +139,7 @@ def test_parquet_sink_matches_json(world, tmp_path):
     import hashlib
 
     spec, cat, bad, assets = world
-    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    plan = default_plan(spec.n_assets)
     rj = run_plan(plan, bad, cat, assets, str(tmp_path / "oj"), str(tmp_path / "mj.json"))
     rp = run_plan(plan, bad, cat, assets, str(tmp_path / "op"), str(tmp_path / "mp.json"), sink_format="parquet")
     assert rp.totals == rj.totals
@@ -191,7 +191,7 @@ def test_violation_counts_equal_spark_count_of_written_files(spark, world, tmp_p
     fresh run and on a resumed pass over an output dir that already holds
     the other partitions' files."""
     spec, cat, bad, assets = world
-    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    plan = default_plan(spec.n_assets)
     out, man = str(tmp_path / "out"), str(tmp_path / "m.json")
     run_plan(plan, bad, cat, assets, out, man, sink_format=fmt)
     _assert_counts_match_files(spark, out, man, fmt)
@@ -216,7 +216,7 @@ def test_non_local_out_dir_refused_up_front(spark, world, tmp_path, monkeypatch)
     import py4j.clientserver
 
     spec, cat, bad, assets = world
-    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    plan = default_plan(spec.n_assets)
     calls = []
     send = py4j.clientserver.JavaClient.send_command
     monkeypatch.setattr(
@@ -232,12 +232,12 @@ def test_non_local_out_dir_refused_up_front(spark, world, tmp_path, monkeypatch)
 
 
 def test_run_plan_job_count(spark, world, tmp_path):
-    """One default-plan run over this world runs 24 jobs: the partition
-    list, the input lineage counts and each constraint's write (with its
-    broadcasts). Reading each dirty constraint's sink back with Spark
-    cost 10 more (34)."""
+    """One default-plan run over this world runs 18 jobs: the partition
+    list, the input lineage counts, the core pass's checkpoint and write,
+    and the referential pass's write (with their broadcasts). Running
+    the four core constraints as four passes cost 25."""
     spec, cat, bad, assets = world
-    plan = default_plan(spec.n_assets, broadcast_catalog=True)
+    plan = default_plan(spec.n_assets)
     sc = spark.sparkContext
     group = "test_resume.run_plan_jobs"
     sc.setJobGroup(group, group)
@@ -254,4 +254,22 @@ def test_run_plan_job_count(spark, world, tmp_path):
         for s in tracker.getJobInfo(j).stageIds
         if tracker.getStageInfo(s) is not None
     ]
-    assert len(jobs) == 24, (len(jobs), stages)
+    assert len(jobs) == 18, (len(jobs), stages)
+
+
+def test_stale_sink_files_are_replaced(small_world, tmp_path):
+    """A run killed between a write and its manifest save leaves files no
+    manifest records. The next run replaces every partition it
+    validates, including ones where it found nothing: an overwrite that
+    only replaced partitions with new rows left the stale file in place,
+    and the clean world failed with its 3 rows counted."""
+    spec, cat, docs, assets = small_world
+    out = tmp_path / "out"
+    stale = out / "span_sequence" / "partition_id=1"
+    stale.mkdir(parents=True)
+    (stale / "part-00000-stale.json").write_text('{"doc_id":"x"}\n' * 3)
+    res = run_plan(default_plan(spec.n_assets), docs, cat, assets, str(out), str(tmp_path / "m.json"))
+    assert res.passed
+    assert res.totals["span_sequence"]["violations"] == 0
+    assert not stale.exists()
+    assert not (out / "_pass").exists()

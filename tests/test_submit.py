@@ -103,7 +103,7 @@ def test_spark_submit_py_files_generate_validate(tmp_path):
     assert r.returncode == 0, f"generate failed:\n{r.stderr[-3000:]}"
     assert os.path.isdir(root)
 
-    r = submit("validate", "--root", root, "--out", out, "--fused")
+    r = submit("validate", "--root", root, "--out", out)
     assert r.returncode == 1, (
         f"faulted world must exit 1 (dirty), got {r.returncode}:\n{r.stderr[-3000:]}"
     )
