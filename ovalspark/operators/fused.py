@@ -48,17 +48,10 @@ def validate_all(
     docs: DataFrame,
     catalog: DataFrame,
     n_assets: int = sp.DEFAULT_N_ASSETS,
-    broadcast_catalog: bool = False,
 ) -> DataFrame:
     """Union-equivalent of span_sequence + existence + partition_counts +
     uniqueness from one docs⋈catalog full-outer pass (see module doc):
     ``core_pass`` without its ``constraint`` column."""
-    # NOTE: no broadcast hint here even when asked — a broadcast on a FULL
-    # OUTER join degenerates to BroadcastNestedLoopJoin. The join is SMJ;
-    # on bucketed/co-partitioned layouts it runs with zero Exchange, which
-    # is the fused path's target deployment. broadcast_catalog is accepted
-    # for API symmetry and ignored.
-    _ = broadcast_catalog
     return core_pass(docs, catalog, n_assets).drop("constraint")
 
 
@@ -68,6 +61,9 @@ def core_pass(docs: DataFrame, catalog: DataFrame, n_assets: int = sp.DEFAULT_N_
     e = _memo(docs, ("core_pass",), _core_exprs)
     cat_e = catalog.filter(e.exists).select(*e.cat)
     d = docs.select(*e.docs)
+    # no broadcast hint: a broadcast FULL OUTER join degenerates to
+    # BroadcastNestedLoopJoin. The join is SMJ, with zero Exchange on
+    # bucketed/co-partitioned layouts
     j = d.join(cat_e, "doc_id", "full_outer").select(*e.joined)
     # Four of the five derivations below never touch the wide spans column.
     # Materialize only the NARROW projection of the join for them (column

@@ -114,21 +114,15 @@ def _empty(spark: SparkSession, schema: StructType | str) -> DataFrame:
     CPU); an action over this one runs no Spark job at all."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    return _local(spark, schema, 0)
+    js = spark._jsparkSession
+    return DataFrame(js.createDataFrame(spark._jvm.java.util.ArrayList(), js.parseDataType(schema.json())), spark)
 
 
 def _one_row(spark: SparkSession) -> DataFrame:
     """One row of no columns as a JVM local relation: a select of
     constants over it is folded by the optimizer, so collecting it runs
     no Spark job (over ``spark.range(1)`` it runs one)."""
-    return _local(spark, StructType([]), 1)
-
-
-def _local(spark: SparkSession, schema: StructType, n_rows: int) -> DataFrame:
-    """``n_rows`` rows of no values (so ``schema`` must have no fields
-    when ``n_rows`` > 0) as a JVM local relation."""
     jvm, js = spark._jvm, spark._jsparkSession
     rows = jvm.java.util.ArrayList()
-    for _ in range(n_rows):
-        rows.add(jvm.org.apache.spark.sql.RowFactory.create(spark._sc._gateway.new_array(jvm.java.lang.Object, 0)))
-    return DataFrame(js.createDataFrame(rows, js.parseDataType(schema.json())), spark)
+    rows.add(jvm.org.apache.spark.sql.RowFactory.create(spark._sc._gateway.new_array(jvm.java.lang.Object, 0)))
+    return DataFrame(js.createDataFrame(rows, js.parseDataType(StructType([]).json())), spark)

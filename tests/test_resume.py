@@ -13,7 +13,7 @@ import pytest
 
 from ovalspark.datagen import inject_faults
 from ovalspark.plans import Manifest, default_plan, run_plan
-from ovalspark.plans.runner import ValidationFailure
+from ovalspark.plans.runner import VCOLS, ValidationFailure
 
 
 def _read_canonical(out_dir: str) -> dict[str, bytes]:
@@ -159,6 +159,32 @@ def test_parquet_sink_matches_json(world, tmp_path):
         return out
 
     assert digest(str(tmp_path / "op")) == digest(str(tmp_path / "op2"))
+
+
+def test_parquet_footers_mark_every_column_nullable(world, tmp_path):
+    """Every parquet sink file's footer carries one schema, every column
+    nullable, whichever constraints shared the pass or a resume re-ran:
+    a pass of one constraint would otherwise carry that operator's own
+    NOT NULL flags, and a resumed sink would mix two footers."""
+    import pyarrow.parquet as pq
+
+    spec, cat, bad, assets = world
+    plan = default_plan(spec.n_assets)
+    out, man = str(tmp_path / "out"), str(tmp_path / "m.json")
+    run_plan(plan, bad, cat, assets, out, man, sink_format="parquet")
+    # resume existence alone on partition 1: the core pass computes one member
+    m = Manifest.load_or_create(man)
+    del m.constraints["existence"]["partitions"]["1"]
+    m.save()
+    run_plan(plan, bad, cat, assets, out, man, sink_format="parquet")
+
+    files = glob.glob(f"{out}/*/partition_id=*/part-*.parquet")
+    assert any("/existence/partition_id=1/" in f for f in files)
+    names = [c for c in VCOLS if c != "partition_id"]
+    for f in files:
+        fields = json.loads(pq.read_schema(f).metadata[b"org.apache.spark.sql.parquet.row.metadata"])["fields"]
+        assert [(x["name"], x["nullable"]) for x in fields] == [(n, True) for n in names], f
+        assert all(x.nullable for x in pq.read_schema(f)), f
 
 
 VIOLATIONS_DDL = (
